@@ -77,7 +77,9 @@ def main() -> int:
             failures += 1
             continue
         # dtype discipline (driver parity): the ONLY canonical mapping
-        # allowed is integer-width alignment (spark int32 vs duckdb int64).
+        # allowed is integer-width alignment (spark int32 vs duckdb int64),
+        # done by widening BOTH sides to int64 — never by narrowing the
+        # oracle, which would wrap out-of-range values silently.
         # Any other dtype mismatch — in particular a DuckDB HUGEINT/decimal
         # arriving float64/object against an integer Spark column — is a
         # FAILURE, exactly like the driver's strict hash (the silent
@@ -95,7 +97,8 @@ def main() -> int:
                 continue
             if pd.api.types.is_integer_dtype(g) and \
                     pd.api.types.is_integer_dtype(w):
-                want[c] = want[c].astype(g)  # width alignment only
+                got[c] = got[c].astype("int64")  # widening only
+                want[c] = want[c].astype("int64")
             else:
                 dtype_bad.append(f"{c}: spark={g} oracle={w}")
         if dtype_bad:

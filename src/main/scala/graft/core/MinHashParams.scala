@@ -55,6 +55,33 @@ final case class MinHashParams(
     * requires byte-exact (`shingling_cluster_generator_optimized.cpp:621-624`).
     */
   @inline def hash(i: Int, x: Long): Long = (x * a(i) + b(i)) % prime
+
+  /** The same family holding only the (a, b) pairs its `numHashes`
+    * functions read — what a plan expression carries.
+    */
+  def trimmed: MinHashParams =
+    if (randoms.length == 2 * numHashes) this
+    else copy(randoms = java.util.Arrays.copyOf(randoms, 2 * numHashes))
+
+  // equality and printing by CONTENT: `randoms` is an Array, whose default
+  // equality is reference identity. Catalyst compares plan expressions with
+  // `==` (exchange reuse, `sameResult`) and prints their arguments in
+  // `explain`, so two equal families must compare equal and read as values.
+  override def equals(o: Any): Boolean = o match {
+    case p: MinHashParams =>
+      kmerLen == p.kmerLen && bandWidth == p.bandWidth &&
+        numHashes == p.numHashes && prime == p.prime &&
+        java.util.Arrays.equals(randoms, p.randoms)
+    case _ => false
+  }
+
+  override def hashCode: Int =
+    java.util.Arrays.hashCode(Array[Long](kmerLen, bandWidth, numHashes,
+      prime, java.util.Arrays.hashCode(randoms).toLong))
+
+  override def toString: String =
+    s"MinHashParams(k=$kmerLen, c=$bandWidth, h=$numHashes, P=$prime, " +
+      f"randoms=${randoms.length}#${java.util.Arrays.hashCode(randoms)}%08x)"
 }
 
 object MinHashParams {

@@ -50,17 +50,22 @@ object Shingler {
   /** The distinct shingle set (for exact-Jaccard verification), sorted. */
   def shingleSet(text: String, k: Int): Array[Long] = {
     val vs = kmerValues(text, k)
-    if (vs.isEmpty) vs
-    else {
-      java.util.Arrays.sort(vs)
-      var w = 1
-      var i = 1
-      while (i < vs.length) {
-        if (vs(i) != vs(w - 1)) { vs(w) = vs(i); w += 1 }
-        i += 1
-      }
-      java.util.Arrays.copyOf(vs, w)
+    java.util.Arrays.copyOf(vs, sortDistinct(vs, vs.length))
+  }
+
+  /** Sorts `vs(0 until n)` and moves its distinct values to the front, in
+    * place; returns how many there are.
+    */
+  def sortDistinct(vs: Array[Long], n: Int): Int = {
+    if (n == 0) return 0
+    java.util.Arrays.sort(vs, 0, n)
+    var w = 1
+    var i = 1
+    while (i < n) {
+      if (vs(i) != vs(w - 1)) { vs(w) = vs(i); w += 1 }
+      i += 1
     }
+    w
   }
 
   /** |A∩B| / |A∪B| over two sorted distinct arrays (merge count). */
@@ -88,17 +93,20 @@ object Shingler {
   // ~3-4x. Layout: varint(count), then varint(first), varint(deltas...).
 
   /** Delta-varint encoding of a sorted-distinct non-negative value array. */
-  def packSet(vs: Array[Long]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(vs.length * 3 + 5)
+  def packSet(vs: Array[Long]): Array[Byte] = packSet(vs, vs.length)
+
+  /** The same encoding of the prefix `vs(0 until n)`. */
+  def packSet(vs: Array[Long], n: Int): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(n * 3 + 5)
     def putVarint(v0: Long): Unit = {
       var v = v0
       while ((v & ~0x7FL) != 0) { out.write(((v & 0x7F) | 0x80).toInt); v >>>= 7 }
       out.write(v.toInt)
     }
-    putVarint(vs.length.toLong)
+    putVarint(n.toLong)
     var prev = 0L
     var i = 0
-    while (i < vs.length) {
+    while (i < n) {
       putVarint(vs(i) - prev) // first delta = first value (prev = 0)
       prev = vs(i)
       i += 1

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * overhead dominates the whole query (q17 measured). This expression is
   * one static-call loop inside whole-stage codegen, no intermediate
   * array. Semantics equal the HOF form for the equal-length non-null
-  * arrays the quantizer produces (spec-asserted).
+  * arrays the quantizer produces (spec-asserted); any other input raises.
   */
 case class LongDot(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -48,14 +48,19 @@ object LongDot {
   }
 
   /** Codegen target — must stay public static. A null ELEMENT inside
-    * either array raises: the HOF form this replaces null-propagates to a
-    * null dot, and silently reading the slot as 0 would fabricate a
-    * finite similarity — the quantizer never produces null elements, so
-    * hitting one means corrupt input, and fail-loud beats either silent
-    * answer (the canonicalByText collision discipline).
+    * either array, or arrays of different lengths, raise: the HOF form
+    * this replaces null-propagates to a null dot, and silently reading a
+    * slot as 0 or truncating to the shorter array would fabricate a
+    * finite similarity — the quantizer never produces either, so hitting
+    * one means corrupt input, and fail-loud beats either silent answer
+    * (the canonicalByText collision discipline).
     */
   def dot(a: ArrayData, b: ArrayData): Long = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
+    if (b.numElements() != n)
+      throw new IllegalArgumentException(
+        s"long_dot: array lengths differ ($n vs ${b.numElements()}) — " +
+        "corrupt quantized embedding input")
     var i = 0
     var s = 0L
     while (i < n) {

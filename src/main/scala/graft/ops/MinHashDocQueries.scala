@@ -1,19 +1,21 @@
 package graft.ops
 
-import graft.core.{MinHasher, MinHashParams, Shingler}
+import graft.core.MinHashParams
+import graft.functions.PackedSetOps
 import graft.pipeline.{ConnectedComponents, DedupPipeline}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The MinHash dedup family over the generic `documents` table, each with a
-  * value-exact DuckDB oracle. These queries run the REAL pipeline kernels
-  * (same `MinHasher` / `ConnectedComponents` code as [[graft.pipeline.DedupPipeline]])
-  * so the driver's DuckDB compare independently re-derives the reference
-  * math (`shingling_cluster_generator_optimized.cpp:604-693`) in SQL.
+  * value-exact DuckDB oracle. These queries compose the REAL pipeline
+  * kernels (the native band-key and shingle-set expressions and
+  * `ConnectedComponents` of [[graft.pipeline.DedupPipeline]]) so the
+  * driver's DuckDB compare independently re-derives the reference math
+  * (`shingling_cluster_generator_optimized.cpp:604-693`) in SQL.
   *
-  * Text is normalized `upper + strip non-A-Z` first so the reference's
-  * `char - 'A'` base-20 encoding applies with digits in [0, 25].
+  * Both kernels normalize text `upper + strip non-A-Z` inline, so the
+  * reference's `char - 'A'` base-20 encoding applies with digits in [0, 25].
   */
 object MinHashDocQueries {
 
@@ -22,37 +24,27 @@ object MinHashDocQueries {
     prime = Ops.Prime,
     randoms = Ops.hashPairs.flatMap { case (a, b) => Seq(a, b) }.toArray)
 
-  def normalizedDocs(spark: SparkSession, dir: String): DataFrame =
+  /** (doc_id, hash_idx, m1, m2) — the c=2 minima per hash function,
+    * unpacked from the pipeline's band keys: for c = 2 the key is
+    * m1·P + m2 with both minima < P.
+    */
+  def signatures(spark: SparkSession, dir: String): DataFrame =
     Ops.table(spark, dir, "documents")
-      .select(col("doc_id"),
-        regexp_replace(upper(col("text")), "[^A-Z]", "").as("t"))
-
-  /** (doc_id, hash_idx, m1, m2) — the c=2 minima per hash function. */
-  def signatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val p = params
-    normalizedDocs(spark, dir).as[(Long, String)]
-      .mapPartitions { it =>
-        val hasher = new MinHasher(p)
-        it.flatMap { case (id, t) =>
-          val sk = hasher.sketch(t)
-          if (sk(0) == null) Iterator.empty
-          else sk.iterator.zipWithIndex.map { case (m, i) =>
-            (id, i.toLong, m(0), m(1))
-          }
-        }
-      }
-      .toDF("doc_id", "hash_idx", "m1", "m2")
+      .select(col("doc_id"), posexplode(
+        DedupPipeline.signatureKeys(col("text"), params))
+        .as(Seq("hash_idx", "key")))
+      .select(col("doc_id"), col("hash_idx").cast("long"),
+        expr(s"key div ${params.prime}").as("m1"),
+        (col("key") % params.prime).as("m2"))
       .orderBy("doc_id", "hash_idx")
-  }
 
-  /** (doc_id, band, key) rows for the LSH join — the shared pipeline stage
-    * (UDF form, so the self-join's exchange is planned once).
+  /** (id, band, key) rows for the LSH join — the shared pipeline stage
+    * (relational, so a self-join's exchange is planned once).
     */
   private def bandRows(spark: SparkSession, dir: String): DataFrame =
     DedupPipeline.signatures(spark,
-      normalizedDocs(spark, dir)
-        .select(col("doc_id").as("id"), col("t").as("text")),
+      Ops.table(spark, dir, "documents")
+        .select(col("doc_id").as("id"), col("text")),
       params)
 
   /** (id_a, id_b) candidate pairs, canonical a < b, distinct. */
@@ -93,7 +85,6 @@ object MinHashDocQueries {
     * compare float-free.
     */
   def jaccard(spark: SparkSession, dir: String): DataFrame = {
-    val k = Ops.KmerLen
     // fully lazy single plan: pairs appear once (sequential joins), the
     // sets subtree is map-only and appears per join side — re-deriving it
     // costs less than persist+eager-checkpoint job latency at gate scale,
@@ -117,10 +108,9 @@ object MinHashDocQueries {
     // (r06: 202k pairs at sf0.1; measured 4.4 -> ~2.9 s). The pre-sort
     // exchange ([[Ops.sortedOutput]]) keeps the range sort's sampling from
     // re-running both set joins (measured +1.6 s without it).
-    import graft.functions.PackedSetOps
-    val setOf = udf((t: String) => Shingler.packSet(Shingler.shingleSet(t, k)))
-    val sets = normalizedDocs(spark, dir)
-      .select(col("doc_id"), setOf(col("t")).as("sh"))
+    val sets = Ops.table(spark, dir, "documents")
+      .select(col("doc_id"),
+        DedupPipeline.packedShingleSet(col("text"), Ops.KmerLen).as("sh"))
     Ops.sortedOutput(pairs
       .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sha")), "id_a")
       .join(sets.select(col("doc_id").as("id_b"), col("sh").as("shb")), "id_b")
@@ -345,12 +335,13 @@ object MinHashDocQueries {
     * i/(|A|+|B|-i) >= 1/2, no float compare). Streaming analogue:
     * [[graft.streaming.StreamingDedup.againstCorpus]].
     *
+    * Both inputs are (id, t) with raw text `t`; the kernels normalize it.
+    *
     * @return (doc_id, dup_of): batch docs that verified against >= 1
     *         corpus doc, labeled by the minimum matching corpus id
     */
   def dedupAgainstCorpus(spark: SparkSession, batch: DataFrame,
       corpus: DataFrame): DataFrame = {
-    val k = Ops.KmerLen
     def sig(d: DataFrame, as: String): DataFrame =
       DedupPipeline.signatures(spark,
         d.select(col("id"), col("t").as("text")), params)
@@ -358,15 +349,15 @@ object MinHashDocQueries {
     val cand = sig(batch, "doc_id")
       .join(sig(corpus, "dup_of"), Seq("band", "key"))
       .select("doc_id", "dup_of").distinct()
-    val setOf = udf((t: String) => Shingler.shingleSet(t, k))
-    val interOf = udf((x: Array[Long], y: Array[Long]) =>
-      Shingler.intersectionSize(x, y).toLong)
-    val bsets = batch.select(col("id").as("doc_id"), setOf(col("t")).as("shb"))
-    val csets = corpus.select(col("id").as("dup_of"), setOf(col("t")).as("shc"))
-    cand.join(bsets, "doc_id").join(csets, "dup_of")
+    def sets(d: DataFrame, as: String, sh: String): DataFrame =
+      d.select(col("id").as(as),
+        DedupPipeline.packedShingleSet(col("t"), Ops.KmerLen).as(sh))
+    cand.join(sets(batch, "doc_id", "shb"), "doc_id")
+      .join(sets(corpus, "dup_of", "shc"), "dup_of")
       .select(col("doc_id"), col("dup_of"),
-        interOf(col("shb"), col("shc")).as("i"),
-        (size(col("shb")) + size(col("shc"))).cast("long").as("apb"))
+        PackedSetOps.intersectionSize(col("shb"), col("shc")).as("i"),
+        (PackedSetOps.setSize(col("shb")) + PackedSetOps.setSize(col("shc")))
+          .as("apb"))
       .where(lit(3L) * col("i") >= col("apb"))
       .groupBy("doc_id").agg(min(col("dup_of")).as("dup_of"))
       .orderBy("doc_id")
@@ -383,8 +374,8 @@ object MinHashDocQueries {
     */
   def corpusDedupFlags(spark: SparkSession, dir: String,
       split: Long = CorpusSplit): DataFrame = {
-    val docs = normalizedDocs(spark, dir)
-      .select(col("doc_id").as("id"), col("t"))
+    val docs = Ops.table(spark, dir, "documents")
+      .select(col("doc_id").as("id"), col("text").as("t"))
     dedupAgainstCorpus(spark,
       docs.where(col("id") >= split), docs.where(col("id") < split))
   }

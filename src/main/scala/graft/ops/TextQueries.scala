@@ -720,7 +720,9 @@ GROUP BY 1, 2 ORDER BY id_a, id_b"""
     * beats persisting the tokenized frame — and the bounds pass reads
     * only the column-pruned doc_id.
     *
-    * @return (doc_id, n_tokens, start_chunk, end_chunk)
+    * @return (doc_id, n_tokens, start_chunk, end_chunk); the chunk indices
+    *         are integral DOUBLEs, and the query raises when a token
+    *         offset reaches 2^53, where a DOUBLE stops being exact
     */
   def chunkSpans(spark: SparkSession, dir: String,
       chunkTokens: Long = ChunkTokens, numBuckets: Int = 0): DataFrame = {
@@ -773,11 +775,15 @@ GROUP BY 1, 2 ORDER BY id_a, id_b"""
     // `sum(BIGINT)` window is HUGEINT, so `prev // N` arrives float64 on
     // the driver's strict-dtype compare while int64 here red-flagged the
     // hash two rounds running (values were always identical — VERDICT r05
-    // "What's wrong" #1). Chunk indices are far below 2^53, so the double
-    // is value-exact.
+    // "What's wrong" #1). The double is value-exact only below 2^53, so a
+    // token offset at or past it raises instead of emitting a rounded
+    // chunk index.
     toks.withColumn("fk", fkCol)
       .join(fm, "fk").join(co, "bucket")
       .withColumn("prev", col("off") + coalesce(sum("n").over(win), lit(0L)))
+      .withColumn("prev", when(col("prev") < lit(1L << 53), col("prev"))
+        .otherwise(raise_error(lit(
+          "chunk_spans: token offset >= 2^53 is not exact as DOUBLE"))))
       .select(col("doc_id"), col("n").as("n_tokens"),
         expr(s"prev div ${chunkTokens}L").cast("double").as("start_chunk"),
         expr(s"(prev + n - 1) div ${chunkTokens}L").cast("double").as("end_chunk"))

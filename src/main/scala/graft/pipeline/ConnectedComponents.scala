@@ -81,13 +81,9 @@ object ConnectedComponents {
       // hash map) and label nodes in one map pass: no assignment-join
       // shuffle, lookup = binary search over the sorted id array
       val bc = spark.sparkContext.broadcast((ids, labels))
-      val labelOf = udf((id: Long) => {
-        val (k, l) = bc.value
-        val idx = java.util.Arrays.binarySearch(k, id)
-        if (idx >= 0) l(idx) else id
-      })
       return nodes.select(col("id").cast("long"))
-        .select(col("id"), labelOf(col("id")).as("component"))
+        .select(col("id"),
+          graft.functions.ComponentLabel.of(col("id"), bc).as("component"))
     }
 
     val debug = sys.env.get("GRAFT_CC_DEBUG").exists(_.toBoolean)

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import graft.core.{MinHasher, MinHashParams, Shingler}
+import graft.core.{MinHashParams, Shingler}
+import graft.functions.{MinHashBandKeys, PackedJaccardGate, PackedShingleSet}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end near-duplicate detection + clustering:
@@ -108,15 +109,6 @@ object DedupPipeline {
     // switching the id expression to xxhash64(url, lit(salt))).
   }
 
-  /** The reference's `char - 'A'` base-20 shingle encoding assumes A-Z
-    * input (FASTA residues, `fasta_util.cpp:81-98`); arbitrary web text is
-    * first normalized `upper + strip non-A-Z` (identity on the reference's
-    * own inputs). Kept as a named column expr so both the pipeline and the
-    * shingle-set verification stage apply the exact same projection.
-    */
-  def normalizeAZ(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(upper(c), "[^A-Z]", "")
-
   /** Stage 1 — signatures, exploded to band rows: (id, band, key).
     * A single map pass (no shuffle), relational (canonicalizable) so when
     * the self-join in [[candidatePairs]] shuffles both sides on (band,
@@ -124,12 +116,12 @@ object DedupPipeline {
     * typed MapPartitions lambda would defeat `sameResult` and compute the
     * signatures twice.
     *
-    * Default path: the native [[graft.functions.MinHashBandKeys]]
-    * expression — normalize + rolling shingle + c-min fused into one pass
-    * over the raw UTF8 bytes inside whole-stage codegen (no regexp pass, no
-    * uppercase copy, no ScalaUDF conversions). Falls back to the
-    * (byte-identical) UDF form when a non-default hash-randoms family is
-    * configured, which the expression does not carry.
+    * The reference's `char - 'A'` base-20 shingle encoding assumes A-Z
+    * input (FASTA residues, `fasta_util.cpp:81-98`); arbitrary web text is
+    * normalized `upper + strip non-A-Z` (identity on the reference's own
+    * inputs). The native [[graft.functions.MinHashBandKeys]] expression
+    * fuses that normalization, the rolling shingle and the c-min sketch
+    * into one pass over the raw UTF8 bytes inside whole-stage codegen.
     */
   def signatures(spark: SparkSession, docs: DataFrame,
       params: MinHashParams): DataFrame =
@@ -142,8 +134,7 @@ object DedupPipeline {
     * column — the un-exploded form of [[signatures]], reused by streaming
     * operators that need one row per document.
     */
-  def signatureKeys(text: org.apache.spark.sql.Column,
-      params: MinHashParams): org.apache.spark.sql.Column =
+  def signatureKeys(text: Column, params: MinHashParams): Column =
     signatureKeysInRange(text, params, 0)
 
   /** Band keys for the hash-index range [fromHash, params.numHashes) —
@@ -151,30 +142,19 @@ object DedupPipeline {
     * incremental sweep's append pass (I1): each step computes ONLY the new
     * bands. fromHash = 0 is the full signature.
     */
-  def signatureKeysInRange(text: org.apache.spark.sql.Column,
-      params: MinHashParams, fromHash: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    // the native expression carries (kmerLen, bandWidth, numHashes) and
-    // rebuilds MinHashParams with the DEFAULT randoms AND prime — both must
-    // match or the kernel computes band keys under the wrong hash family
-    val nativeOk = (params.prime == MinHashParams.DefaultPrime) &&
-      ((params.randoms eq graft.core.HashRandoms.default) ||
-        params.randoms.sameElements(graft.core.HashRandoms.default))
-    if (nativeOk)
-      GraftSqlBridge.column(graft.functions.MinHashBandKeys(
-        GraftSqlBridge.expression(text),
-        params.kmerLen, params.bandWidth, params.numHashes, fromHash))
-    else {
-      // one hasher per CLOSURE (not per row), buffers reused across rows
-      val hasher = new MinHasher(params)
-      val until = params.numHashes
-      val keysUdf =
-        if (fromHash == 0) udf((t: String) => hasher.bandKeys(t))
-        else udf((t: String) =>
-          hasher.bandsInRange(t, fromHash, until).map(_._2))
-      keysUdf(normalizeAZ(text))
-    }
-  }
+  def signatureKeysInRange(text: Column, params: MinHashParams,
+      fromHash: Int): Column =
+    GraftSqlBridge.column(MinHashBandKeys(GraftSqlBridge.expression(text),
+      params.trimmed, fromHash))
+
+  /** The packed distinct k-mer set of the normalized text
+    * ([[Shingler.packSet]] layout) — the exact-Jaccard payload of
+    * [[verifyPairsManaged]] and the gate queries, computed by the native
+    * [[graft.functions.PackedShingleSet]] expression.
+    */
+  def packedShingleSet(text: Column, kmerLen: Int): Column =
+    GraftSqlBridge.column(PackedShingleSet(GraftSqlBridge.expression(text),
+      kmerLen))
 
   /** Stage 2 — candidate pairs: within every (band, key) LSH bucket emit
     * all canonical (a < b) pairs, then distinct across bands — the
@@ -477,12 +457,6 @@ object DedupPipeline {
     // [[run]] it is already a stage table, this protects direct callers.
     val pairs = pairsIn.persist(org.apache.spark.storage.StorageLevel
       .MEMORY_AND_DISK)
-    val k = params.kmerLen
-    // packed (delta+varint) sets: the pair join below ships each set once
-    // per pair side, and that shuffle dominates the stage — packing cuts it
-    // ~3-4x vs array<bigint> (Shingler.packSet)
-    val setOf = udf((text: String) =>
-      Shingler.packSet(Shingler.shingleSet(text, k)))
     // semi-join pruning pays when candidate pairs touch a small fraction of
     // docs (the web-scale shape); on dup-heavy inputs where most docs are
     // in pairs, the distinct + semi-join shuffles cost more than sketching
@@ -494,14 +468,16 @@ object DedupPipeline {
           .union(pairs.select(col("b").as("id"))).distinct()
         docs.join(ids, "id")
       }
+    // packed (delta+varint) sets: the pair join below ships each set once
+    // per pair side, and that shuffle dominates the stage — packing cuts it
+    // ~3-4x vs array<bigint> (Shingler.packSet)
     val sets = pruned
-      .select(col("id"), setOf(normalizeAZ(col("text"))).as("sh"))
+      .select(col("id"), packedShingleSet(col("text"), params.kmerLen).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // native codegen'd gate expression (no ScalaUDF wrapper in the
     // per-pair hot path) — semantics identical to the UDF form, spec-equal
-    import org.apache.spark.sql.GraftSqlBridge
-    def keep(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-      GraftSqlBridge.column(graft.functions.PackedJaccardGate(
+    def keep(x: Column, y: Column) =
+      GraftSqlBridge.column(PackedJaccardGate(
         GraftSqlBridge.expression(x), GraftSqlBridge.expression(y), threshold))
     val out = pairs
       .join(sets.select(col("id").as("a"), col("sh").as("sha")), "a")

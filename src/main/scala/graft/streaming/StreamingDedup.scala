@@ -112,7 +112,7 @@ object StreamingDedup {
     // path the batch pipeline and [[againstCorpus]] already run): the
     // per-batch map work stays inside whole-stage codegen instead of a
     // ScalaUDF + tuple-array conversion per page — byte-identical band
-    // keys (spec: streaming == batch; the fused kernel == UDF spec covers
+    // keys (spec: streaming == batch; the kernel == MinHasher spec covers
     // the kernel itself)
     val bands = pages
       .select(xxhash64(col("url")).as("id"),

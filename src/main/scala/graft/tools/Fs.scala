@@ -1,7 +1,7 @@
 package graft.tools
 
-/** Shared filesystem helpers for the measurement mains (Bench, SweepBench,
-  * ProfVerify) — one recursive delete instead of a copy per main.
+/** Shared filesystem helper (Bench, HashSweep, the perfbench harness) — one
+  * recursive delete instead of a copy per caller.
   */
 object Fs {
   def rmRf(f: java.io.File): Unit = {

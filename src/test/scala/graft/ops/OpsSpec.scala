@@ -56,6 +56,12 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
       GraftSqlBridge.expression(col("a")), GraftSqlBridge.expression(col("b")))))
       .collect().map(_.getLong(0))
     assert(hof.toSeq == nat.toSeq)
+    // unequal lengths are corrupt input: raise, never truncate
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    assert(intercept[IllegalArgumentException] {
+      graft.functions.LongDot.dot(ArrayData.toArrayData(Array(1L, 2L, 3L)),
+        ArrayData.toArrayData(Array(4L, 5L)))
+    }.getMessage.contains("array lengths differ"))
   }
 
   test("packed intersection/size expressions == unpacked kernels") {

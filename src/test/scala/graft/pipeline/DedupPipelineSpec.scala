@@ -46,6 +46,11 @@ class DedupPipelineSpec extends AnyFunSuite with SparkSpec {
 
   test("small corpus (1000 docs): pipeline == oracle, with jaccard verify") {
     compare(PagesGen.small, DedupConfig(params = p8, jaccardThreshold = 0.5))
+    // a non-default hash family: shuffled randoms and another prime
+    val shuffled = new scala.util.Random(11)
+      .shuffle(graft.core.HashRandoms.default.toSeq).toArray
+    compare(PagesGen.small, DedupConfig(jaccardThreshold = 0.5,
+      params = p8.copy(prime = 1000000007L, randoms = shuffled)))
   }
 
   test("text extraction reproduces the text column byte-identically") {

@@ -73,12 +73,71 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"pushdown missing in:\n$plan")
   }
 
-  test("signature stage plans no shuffle (single map pass)") {
+  /** Executed (final adaptive) plans of every action `body` runs —
+    * including the ones a query triggers while it is being built (the CC
+    * driver finish's collect, nocc's checkpoint).
+    */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val marker = s"plan-capture-end-${System.nanoTime()}"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = plans.add(qe.executedPlan.toString)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive in order: once the marker query's plan is
+      // in, so is every plan before it
+      spark.range(1).select(org.apache.spark.sql.functions.lit(marker))
+        .collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!plans.toArray.exists(_.toString.contains(marker))) {
+        assert(System.nanoTime() < deadline, "listener events never arrived")
+        Thread.sleep(10)
+      }
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray.map(_.toString).filterNot(_.contains(marker)).toSeq
+  }
+
+  test("signature stage: one map pass; gate queries run only native kernels") {
     val pages = Pages.toDS(spark, PagesGen.micro).toDF()
     val docs = DedupPipeline.extractDocs(pages)
     val bands = DedupPipeline.signatures(spark, docs, p)
     val plan = bands.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
+
+    // every MinHash gate query composes the pipeline's native kernels: no
+    // UDF and no regexp pass anywhere in what it executes, and the band-key
+    // expression runs inside a whole-stage codegen span ("*(n)")
+    val codegenLine = "^[\\s:|+-]*\\*\\(\\d+\\) ".r
+    for (name <- Seq("q02_minhash_signatures", "q03_lsh_pairs",
+        "q04_minhash_clusters", "q05_jaccard_verify", "q06_cluster_sizes",
+        "q07_top_clusters", "q23_label_prop_clusters",
+        "q24_vertex_round_clusters", "q26_nocc", "q27_remove_clusters",
+        "q36_corpus_dedup", "q39_keep_per_cluster", "q41_band_match",
+        "q45_source_stats")) {
+      val plans = executedPlans {
+        graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+          .collect(): Unit
+      }
+      val all = plans.mkString("\n")
+      assert(!all.contains("UDF") && !all.contains("regexp_replace"),
+        s"$name runs a UDF or a regexp pass:\n$all")
+      // an adaptive plan prints its final plan first, then the initial one
+      // (which carries no codegen markers)
+      val kernelLines = plans.flatMap(_.split("== Initial Plan ==")(0)
+        .linesIterator.filter(_.contains("minhash_band_keys")))
+      assert(kernelLines.nonEmpty, s"$name never ran minhash_band_keys:\n$all")
+      kernelLines.foreach { l =>
+        assert(codegenLine.findPrefixOf(l).isDefined,
+          s"$name: minhash_band_keys outside a codegen span: $l")
+      }
+    }
   }
 
   test("salted path: hot-key joins broadcast, never shuffle the band rows twice") {
