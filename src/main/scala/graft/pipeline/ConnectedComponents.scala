@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Connected components via alternating large-star / small-star
@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   * `union_find.cpp:43-63`) but skew-safe behavior: no node ever
   * materializes its whole component in one task.
   *
-  * Each star step is ONE shuffle: repartition by node, sort within
-  * partitions, stream each node's neighbor group computing the min and
-  * re-linking — emitted edges are deduped within the group (sorted input),
-  * so no separate distinct pass is needed. Convergence = stable
+  * Each star step is ONE shuffle: a sorted group reduce by node
+  * ([[neighbourSets]]) hands each node its sorted distinct neighbors and
+  * re-links them to the min — emitted edges are distinct within the
+  * group, so no separate distinct pass is needed. Convergence = stable
   * (count, xor-hash) signature of the edge set; each iteration is
   * localCheckpoint'ed to cut lineage (a reliable checkpoint / stage table
   * on a real cluster — see [[DedupPipeline]]).
@@ -38,9 +38,7 @@ object ConnectedComponents {
     *              gate simply never engages. 0 (default) = always
     *              distribute; [[DedupPipeline.run]] opts in via
     *              [[DedupConfig.ccDriverFinishMaxEdges]].
-    * @return DataFrame(id: long, component: long), component = min member id
-    */
-  /** @param inputMaterialized the edge input is already a cheaply
+    * @param inputMaterialized the edge input is already a cheaply
     *              re-readable materialization (e.g. a committed stage
     *              table) — skips the eager input localCheckpoint, which
     *              would otherwise copy the whole edge set a second time
@@ -52,6 +50,7 @@ object ConnectedComponents {
     *              when the caller already has it (stage manifests carry
     *              it) — skips the driver-finish gate's pre-count job.
     *              -1 = unknown, count when needed.
+    * @return DataFrame(id: long, component: long), component = min member id
     */
   def run(spark: SparkSession, edges: DataFrame, nodes: DataFrame,
       maxIter: Int = 64, assumeCanonical: Boolean = false,
@@ -86,12 +85,10 @@ object ConnectedComponents {
           graft.functions.ComponentLabel.of(col("id"), bc).as("component"))
     }
 
-    val debug = sys.env.get("GRAFT_CC_DEBUG").exists(_.toBoolean)
     var prevSig: (Long, Long) = (-1L, 0L)
     var iter = 0
     var converged = cur.isEmpty
     while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
       // order-independent, overflow-free edge-set signature (edges are
       // distinct within groups; duplicate emissions across groups are
       // impossible for small-star and harmless-rare for large-star, and a
@@ -129,8 +126,6 @@ object ConnectedComponents {
       cur.unpersist()
       cur = next
       iter += 1
-      if (debug) System.err.println(
-        f"[cc] iter $iter: ${(System.nanoTime() - t0) / 1e9}%.2fs edges ${sig._1}")
     }
     // a non-converged star forest is silently WRONG (nodes may carry a
     // non-minimal label) — fail loudly; large/small-star converges in
@@ -250,44 +245,27 @@ object ConnectedComponents {
     }
   }
 
-  /** Stream sorted (u, v) rows as per-u groups, emitting re-linked edges.
-    * `emit(u, sortedDistinctVs, out)` appends this group's output edges.
+  /** The graph's grouped reduce — the reference's collate → reduce over
+    * directed (u, v) rows (`shingling_cluster_generator_optimized.cpp`
+    * vertex round `:830-1000`, CC `:1444-1531`): one shuffle by u,
+    * then `f(u, sortedDistinctNeighbours)` once per node. Shared by the
+    * star steps, the vertex round ([[VertexShingling.vertexBandRows]]) and
+    * the vertex cache's sketches ([[VertexSketchCache]]).
     */
-  private def groupedStep(spark: SparkSession, rows: Dataset[(Long, Long)])(
-      emit: (Long, Array[Long],
-          scala.collection.mutable.ArrayBuffer[(Long, Long)]) => Unit)
-      : Dataset[(Long, Long)] = {
+  private[pipeline] def neighbourSets[U: Encoder](nbrs: Dataset[(Long, Long)])(
+      f: (Long, Array[Long]) => IterableOnce[U]): Dataset[U] = {
+    val spark = nbrs.sparkSession
     import spark.implicits._
-    rows
-      .repartition(col("_1"))
-      .sortWithinPartitions("_1", "_2")
-      .mapPartitions { it =>
-        new Iterator[(Long, Long)] {
-          private var pending: (Long, Long) = if (it.hasNext) it.next() else null
-          private val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          private var outIdx = 0
-          private val vs = scala.collection.mutable.ArrayBuffer.empty[Long]
-
-          private def advance(): Unit = {
-            while (outIdx >= out.length && pending != null) {
-              out.clear(); outIdx = 0
-              val u = pending._1
-              vs.clear()
-              vs += pending._2
-              pending = null
-              while (pending == null && it.hasNext) {
-                val r = it.next()
-                if (r._1 == u) { if (r._2 != vs.last) vs += r._2 } // sorted dedupe
-                else pending = r
-              }
-              emit(u, vs.toArray, out)
-            }
-          }
-          override def hasNext: Boolean = { advance(); outIdx < out.length }
-          override def next(): (Long, Long) = {
-            advance(); val e = out(outIdx); outIdx += 1; e
-          }
+    // reused across groups: each task deserializes its own closure copy
+    val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+    nbrs.toDF("u", "v").groupBy(col("u")).as[Long, (Long, Long)]
+      .flatMapSortedGroups(col("v")) { (u, rows) =>
+        buf.clear()
+        var last = 0L
+        rows.foreach { r =>
+          if (buf.length == 0 || r._2 != last) { buf.addOne(r._2); last = r._2 }
         }
+        f(u, buf.result())
       }
   }
 
@@ -298,13 +276,9 @@ object ConnectedComponents {
       edges: Dataset[(Long, Long)]): Dataset[(Long, Long)] = {
     import spark.implicits._
     val nbrs = edges.flatMap(e => Iterator((e._1, e._2), (e._2, e._1)))
-    groupedStep(spark, nbrs) { (u, vs, out) =>
+    neighbourSets(nbrs) { (u, vs) =>
       val m = math.min(u, vs(0)) // vs sorted ascending
-      var i = 0
-      while (i < vs.length) {
-        if (vs(i) > u && vs(i) != m) out += ((m, vs(i)))
-        i += 1
-      }
+      vs.iterator.filter(v => v > u && v != m).map(v => (m, v))
     }
   }
 
@@ -316,14 +290,9 @@ object ConnectedComponents {
       edges: Dataset[(Long, Long)]): Dataset[(Long, Long)] = {
     import spark.implicits._
     val sm = edges.map(e => (e._2, e._1)) // (u = larger, v = smaller)
-    groupedStep(spark, sm) { (u, vs, out) =>
-      val m = vs(0) // min smaller neighbor; m < u
-      var i = 1
-      while (i < vs.length) {
-        out += ((m, vs(i))) // m < vs(i) since sorted
-        i += 1
-      }
-      out += ((m, u))
+    neighbourSets(sm) { (u, vs) =>
+      val m = vs(0) // min smaller neighbor; m < u and m < vs(i > 0)
+      vs.iterator.drop(1).map(v => (m, v)) ++ Iterator.single((m, u))
     }
   }
 }

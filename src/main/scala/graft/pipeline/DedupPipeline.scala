@@ -20,12 +20,15 @@ import org.apache.spark.sql.functions._
   * skew capping, and per-stage checkpoint/resume.
   *
   * Scale notes (designed for ~10^12 rows / 1000 executors, tested local):
-  *   - signatures are computed in one `mapPartitions` pass (no shuffle);
-  *   - candidate generation is an equi-self-join on (band, key), NOT a
-  *     collect_list bucket materialization, so AQE skew-join splitting can
-  *     spread a hot band across tasks; bucket sizes above `maxBucketSize`
-  *     are dropped *before* the join with the drop count recorded in
-  *     metrics (the reference just eats the n² blowup, `:750-798`);
+  *   - signatures are one map pass of the native band-key expression
+  *     inside whole-stage codegen (no shuffle);
+  *   - candidate generation is one shuffle by (band, key) and a sorted
+  *     group reduce per bucket (`flatMapSortedGroups`, the reference's
+  *     collate → reduce), streaming each bucket's pairs instead of
+  *     materializing them; hot buckets above `saltBlockSize` are split
+  *     losslessly over salted groups, and buckets above `maxBucketSize`
+  *     are dropped with the drop count recorded in metrics (the reference
+  *     just eats the n² blowup, `:750-798`);
   *   - every stage can persist to a snapshot table `outputDir/<stage>`
   *     ([[SnapshotCatalog]] — atomic commit, per-file lineage metrics, time
   *     travel) and is skipped on resume when a committed snapshot exists
@@ -110,11 +113,8 @@ object DedupPipeline {
   }
 
   /** Stage 1 — signatures, exploded to band rows: (id, band, key).
-    * A single map pass (no shuffle), relational (canonicalizable) so when
-    * the self-join in [[candidatePairs]] shuffles both sides on (band,
-    * key), Catalyst plans ONE exchange and reuses it (ReusedExchange) — a
-    * typed MapPartitions lambda would defeat `sameResult` and compute the
-    * signatures twice.
+    * A single map pass (no shuffle), relational (canonicalizable) so
+    * Catalyst can reuse it wherever a query reads the band rows twice.
     *
     * The reference's `char - 'A'` base-20 shingle encoding assumes A-Z
     * input (FASTA residues, `fasta_util.cpp:81-98`); arbitrary web text is
@@ -162,9 +162,9 @@ object DedupPipeline {
     * (`shingling_cluster_generator_optimized.cpp:225-249`, `:750-798`),
     * emitting each pair once instead of both directions.
     *
-    * Default strategy: ONE shuffle (repartition by bucket key) + sorted
-    * streaming group emission in a partition pass — measured ~2x faster
-    * than the equi-self-join, which sorts the band rows twice.
+    * ONE shuffle (repartition by bucket key) + a sorted group reduce per
+    * bucket — measured ~2x faster than an equi-self-join on (band, key),
+    * which sorts the band rows twice.
     *
     * Hot-band skew (north rule): buckets larger than `saltBlockSize` are
     * decomposed LOSSLESSLY via salted band keys — each member is assigned a
@@ -179,14 +179,12 @@ object DedupPipeline {
     *
     * Buckets above `maxBucketSize` are still dropped (with metrics) — an
     * explicit recall/cost policy knob, now orthogonal to skew handling.
-    * Set `selfJoin = true` for the AQE skew-split join formulation.
     *
     * Returns (pairs, droppedBuckets) — droppedBuckets is the drop-metrics
     * source, computed only when a cap is set.
     */
   def candidatePairs(spark: SparkSession, bandRows: DataFrame,
-      maxBucketSize: Int, selfJoin: Boolean = false,
-      saltBlockSize: Int = Int.MaxValue,
+      maxBucketSize: Int, saltBlockSize: Int = Int.MaxValue,
       saltDetectFraction: Double = 1.0): (DataFrame, DataFrame) = {
     require(saltBlockSize >= 2 || saltBlockSize == Int.MaxValue,
       s"saltBlockSize must be >= 2, got $saltBlockSize")
@@ -197,19 +195,7 @@ object DedupPipeline {
       if (maxBucketSize == Int.MaxValue) sized.where(lit(false))
       else sized.where(col("n") > maxBucketSize)
 
-    val pairs = if (selfJoin) {
-      val eligible =
-        if (maxBucketSize == Int.MaxValue) bandRows
-        else bandRows.join(dropped.select("band", "key"), Seq("band", "key"),
-          "left_anti")
-      // identical child plans on both sides: the (band, key) shuffle is
-      // planned once and reused (ReusedExchange)
-      eligible.as("l").join(eligible.as("r"),
-          col("l.band") === col("r.band") && col("l.key") === col("r.key")
-            && col("l.id") < col("r.id"))
-        .select(col("l.id").as("a"), col("r.id").as("b"))
-        .distinct()
-    } else if (saltBlockSize == Int.MaxValue) {
+    val pairs = if (saltBlockSize == Int.MaxValue) {
       groupEmitPairs(spark, bandRows, maxBucketSize).distinct()
     } else {
       // Hot-key detection. At saltDetectFraction = 1 it is exact (a full
@@ -273,15 +259,14 @@ object DedupPipeline {
     (pairs, dropped)
   }
 
-  /** One shuffle + sorted streaming group emission: memory is bounded by
-    * one bucket's id array (<= cap), never by its n^2 pair count.
-    */
   /** Partition count for the sort-heavy pair-generation shuffles: the
     * per-task sort is the stage's bottleneck (O(n log n) single-threaded),
     * so use 2x the cluster's cores when the configured shuffle partitions
     * are lower — measured 1.4x faster at 164M band rows / 32 threads, while
     * the join/CC stages stay at the configured count (more partitions
-    * measurably HURT the latency-bound CC iterations).
+    * measurably HURT the latency-bound CC iterations). The explicit
+    * repartition already satisfies the grouped reduce's required
+    * distribution, so it stays the stage's only exchange.
     */
   private def pairGenPartitions(spark: SparkSession): Int =
     math.max(spark.sparkContext.defaultParallelism * 2,
@@ -302,45 +287,30 @@ object DedupPipeline {
 
   /** [[groupEmitPairs]] keeping the ORIGIN BAND on each emitted pair —
     * the provenance the sweep's incremental pair table needs
-    * ([[HashSweep]]: pairs stored under their first-seen band). Bounded
-    * memory per bucket like the untagged form; a hot bucket emits its
-    * pairs serially in one task (lossless — the salted decomposition
-    * applies only on the untagged path, where provenance is not needed).
+    * ([[HashSweep]]: pairs stored under their first-seen band). Memory is
+    * bounded by one bucket's id array, never by its n² pair count, which is
+    * streamed; a hot bucket emits its pairs serially in one task (lossless
+    * — the salted decomposition applies only on the untagged path, where
+    * provenance is not needed).
     */
   private[pipeline] def groupEmitPairsTagged(spark: SparkSession,
       bandRows: DataFrame, maxBucketSize: Int): DataFrame = {
     import spark.implicits._
-    val cap = maxBucketSize
-    bandRows
+    // reused across groups: each task deserializes its own closure copy
+    val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+    bandRows.select(col("band"), col("key"), col("id"))
       .repartition(pairGenPartitions(spark), col("band"), col("key"))
-      .sortWithinPartitions("band", "key", "id")
-      .select(col("band"), col("key"), col("id")).as[(Int, Long, Long)]
-      .mapPartitions { it =>
-        // stream (band, key) groups off the sorted iterator, then emit
-        // each group's pairs lazily
-        val groups = new Iterator[(Int, Array[Long])] {
-          private var pending: (Int, Long, Long) =
-            if (it.hasNext) it.next() else null
-          override def hasNext: Boolean = pending != null
-          override def next(): (Int, Array[Long]) = {
-            val (b0, k0, id0) = pending
-            val ids = scala.collection.mutable.ArrayBuffer[Long](id0)
-            pending = null
-            while (pending == null && it.hasNext) {
-              val r = it.next()
-              if (r._1 == b0 && r._2 == k0) ids += r._3 else pending = r
-            }
-            (b0, ids.toArray) // ascending: input sorted by (band, key, id)
-          }
-        }
-        groups.flatMap { case (band, ids) =>
-          if (ids.length < 2 || ids.length > cap) Iterator.empty
-          else for {
-            i <- ids.indices.iterator
-            j <- (i + 1 until ids.length).iterator
-            if ids(i) != ids(j)
-          } yield (band, ids(i), ids(j))
-        }
+      .groupBy(col("band"), col("key")).as[(Int, Long), (Int, Long, Long)]
+      .flatMapSortedGroups(col("id")) { case ((band, _), rows) =>
+        buf.clear()
+        rows.foreach(r => buf.addOne(r._3))
+        val ids = buf.result() // ascending
+        if (ids.length < 2 || ids.length > maxBucketSize) Iterator.empty
+        else for {
+          i <- ids.indices.iterator
+          j <- (i + 1 until ids.length).iterator
+          if ids(i) != ids(j)
+        } yield (band, ids(i), ids(j))
       }
       .toDF("band", "a", "b")
   }
@@ -365,48 +335,35 @@ object DedupPipeline {
   private[pipeline] def saltedPairs(spark: SparkSession,
       hotRows: DataFrame): DataFrame = {
     import spark.implicits._
+    // reused across groups: each task deserializes its own closure copy
+    val leftBuf = new scala.collection.mutable.ArrayBuilder.ofLong
+    val rightBuf = new scala.collection.mutable.ArrayBuilder.ofLong
     saltedGroups(spark, hotRows)
       .repartition(pairGenPartitions(spark),
         col("band"), col("key"), col("gi"), col("gj"))
-      .sortWithinPartitions("band", "key", "gi", "gj", "blk", "id")
-      .as[(Int, Long, Int, Int, Int, Long)]
-      .mapPartitions { it =>
-        // stream (band, key, gi, gj) groups; rows sorted by (blk, id) split
-        // each group into its gi-block prefix and gj-block suffix
-        new Iterator[(Long, Long)] {
-          private var pending: (Int, Long, Int, Int, Int, Long) =
-            if (it.hasNext) it.next() else null
-          private var out: Iterator[(Long, Long)] = Iterator.empty
-
-          private def advance(): Unit = {
-            while (!out.hasNext && pending != null) {
-              val (b0, k0, gi, gj, _, _) = pending
-              val left = scala.collection.mutable.ArrayBuffer.empty[Long]
-              val right = scala.collection.mutable.ArrayBuffer.empty[Long]
-              while (pending != null && pending._1 == b0 && pending._2 == k0
-                  && pending._3 == gi && pending._4 == gj) {
-                if (pending._5 == gi) left += pending._6 else right += pending._6
-                pending = if (it.hasNext) it.next() else null
-              }
-              out =
-                if (gi == gj) // triangle within one block (ids ascending)
-                  for {
-                    i <- left.indices.iterator
-                    j <- (i + 1 until left.length).iterator
-                    if left(i) != left(j)
-                  } yield (left(i), left(j))
-                else // cross product of the two blocks, canonical order
-                  for {
-                    i <- left.indices.iterator
-                    j <- right.indices.iterator
-                    if left(i) != right(j)
-                  } yield (math.min(left(i), right(j)),
-                           math.max(left(i), right(j)))
-            }
-          }
-          override def hasNext: Boolean = { advance(); out.hasNext }
-          override def next(): (Long, Long) = { advance(); out.next() }
+      .groupBy(col("band"), col("key"), col("gi"), col("gj"))
+      .as[(Int, Long, Int, Int), (Int, Long, Int, Int, Int, Long)]
+      .flatMapSortedGroups(col("blk"), col("id")) { case ((_, _, gi, gj), rows) =>
+        // rows sorted by (blk, id) split the group into its gi block and
+        // its gj block, each ascending
+        leftBuf.clear(); rightBuf.clear()
+        rows.foreach { r =>
+          if (r._5 == gi) leftBuf.addOne(r._6) else rightBuf.addOne(r._6)
         }
+        val left = leftBuf.result()
+        val right = rightBuf.result()
+        if (gi == gj) // triangle within one block
+          for {
+            i <- left.indices.iterator
+            j <- (i + 1 until left.length).iterator
+            if left(i) != left(j)
+          } yield (left(i), left(j))
+        else // cross product of the two blocks, canonical order
+          for {
+            i <- left.indices.iterator
+            j <- right.indices.iterator
+            if left(i) != right(j)
+          } yield (math.min(left(i), right(j)), math.max(left(i), right(j)))
       }
       .toDF("a", "b")
   }
@@ -435,17 +392,8 @@ object DedupPipeline {
     * sorted arrays per pair: O(|A|+|B|) primitive ops, no per-pair explode.
     * (An explode+equi-join formulation was measured 10x slower here: it
     * shuffles |pairs| * |set| rows; the merge-count ships each set once.)
-    */
-  def verifyPairs(spark: SparkSession, pairsIn: DataFrame, docs: DataFrame,
-      params: MinHashParams, threshold: Double): DataFrame = {
-    val (df, _) = verifyPairsManaged(spark, pairsIn, docs, params, threshold)
-    df
-    // NOTE: two intermediate tables stay cached until session end; callers
-    // holding a long-lived session should use [[verifyPairsManaged]] and
-    // invoke the cleanup once the result is materialized (as [[run]] does).
-  }
-
-  /** As [[verifyPairs]], returning an unpersist handle the caller invokes
+    *
+    * Returns the verified pairs and an unpersist handle the caller invokes
     * AFTER the result has been materialized (stage write / checkpoint /
     * collect) — unpersisting earlier silently recomputes both join sides.
     */
@@ -577,7 +525,7 @@ object DedupPipeline {
       // output: one exchange (by component) instead of the former
       // aggregate-then-join shape's two (groupBy sizes + SMJ back) — the
       // profiled stage cost is this job, not the snapshot commit
-      // (GRAFT_COMMIT_DEBUG at 4M: footers 0.04 s, manifest < 0.01 s)
+      // (measured at 4M: footers 0.04 s, manifest < 0.01 s)
       val w = org.apache.spark.sql.expressions.Window.partitionBy("component")
       val out = components.join(docs.select("id", "url"), "id")
         .select(col("id"), col("url"), col("component").as("cluster"),

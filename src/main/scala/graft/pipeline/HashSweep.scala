@@ -172,8 +172,8 @@ object HashSweep {
     // is then a plain prefix read `band < n`: already distinct, no re-join
     // of all h bands per step. Per step this turns the former
     // O(h · bandRows) pair-gen re-join into O(bandRows_new + |pairs|)
-    // (one new-band self-join + one anti-join against the ~|pairs| table),
-    // and over a sweep O(h²) -> O(h) band-row joins — the same
+    // (one new-band group emission + one anti-join against the ~|pairs|
+    // table), and over a sweep O(h²) -> O(h) band-row joins — the same
     // incrementality contract (and the same marker commit protocol) as
     // the band table itself.
     var pairsMaterialized = committedPrefix(pairDir, adoptUnmarked = false)
@@ -251,14 +251,11 @@ object HashSweep {
       val pairs = caches match {
         case None => kmerPairs
         case Some(cs) =>
-          // band-prefix advance (r06): the pair table IS the incorporation
-          // log (canonical distinct pairs under their first-seen band,
+          // band-prefix advance: the pair table IS the incorporation log
+          // (canonical distinct pairs under their first-seen band,
           // marker-committed), so the cache's delta is a pruned
           // `band in [prev, n)` read and the step is ONE atomic state
-          // commit — the stored-nbrs protocol's canonicalize+distinct
-          // exchange, full anti-join and second commit per trajectory per
-          // step are gone (VERDICT r05 ask #4; before/after legs in
-          // BASELINE.md round 6). advance() remains the general-input API.
+          // commit (before/after legs in BASELINE.md round 6)
           val vb = leg(s".cache_advance_$trajectory")(
             cs(trajectory).advanceByBandPrefix(table, numBands, numBands))
           val (extra, _) = DedupPipeline.candidatePairs(spark, vb,
@@ -267,9 +264,13 @@ object HashSweep {
           kmerPairs.union(extra).distinct()
       }
       // CC runs its iteration jobs eagerly, so this sub-leg also absorbs
-      // the (lazy) vertex pair-gen + union feeding it
+      // the (lazy) vertex pair-gen + union feeding it. Both pair sets are
+      // canonical and distinct by construction (the table prefix is
+      // anti-joined across bands; the vertex union is re-distinct'ed) —
+      // skip CC's canonicalize shuffle, as DedupPipeline.run does
       leg(s".cc_$trajectory")(
         ConnectedComponents.run(spark, pairs, docs.select("id"),
+            assumeCanonical = true,
             driverFinishMaxEdges = ccDriverFinishMaxEdges)
           .select(col("id").as("member"), col("component").as("label")))
     }

@@ -83,16 +83,13 @@ final class SnapshotCatalog(spark: SparkSession, warehouse: String) {
 
     // 1. immutable data files; footers are read back in parallel — a
     // serial loop over hundreds of files would add seconds per commit
-    val t0 = System.nanoTime()
     df.write.mode("errorifexists").parquet(dataDir.toString)
-    val t1 = System.nanoTime()
     val newFiles = {
       import scala.collection.parallel.CollectionConverters._
       listParquet(dataDir).par.map(footerMeta).seq.toSeq
     }
-    val t2 = System.nanoTime()
 
-    // 2. manifest: new files (+ parent's files when appending)
+    // 2. manifest: new files (+ the parent's files for an append)
     val carried =
       if (operation == "append" && parent > 0) snapshot(table, parent).files
       else Seq.empty
@@ -101,13 +98,6 @@ final class SnapshotCatalog(spark: SparkSession, warehouse: String) {
     val manifest = metaDir(table).resolve(s"v$version.metadata.json")
     Files.write(manifest, manifestJson(snap).getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE_NEW)
-    // tolerant parse: a debug knob must never crash a commit ("1"/"yes"
-    // would throw in String.toBoolean)
-    if (sys.env.get("GRAFT_COMMIT_DEBUG")
-        .exists(v => v.equalsIgnoreCase("true") || v == "1"))
-      System.err.println(f"[commit] $table v$version: write ${(t1 - t0) / 1e9}%.2fs " +
-        f"footers(${newFiles.length}) ${(t2 - t1) / 1e9}%.2fs " +
-        f"manifest ${(System.nanoTime() - t2) / 1e9}%.2fs")
 
     // 3. atomic hint swap — the commit point
     val tmp = metaDir(table).resolve(s".hint-$snapId.tmp")

@@ -94,46 +94,12 @@ object VertexShingling {
   def vertexBandRows(spark: SparkSession, edges: DataFrame,
       params: MinHashParams): DataFrame = {
     import spark.implicits._
-    val p = params
     val nbrs = edges.select(col("a").as("u"), col("b").as("v"))
       .union(edges.select(col("b").as("u"), col("a").as("v")))
       .as[(Long, Long)]
-    val bandRows = nbrs
-      .repartition(col("u"))
-      .sortWithinPartitions("u", "v")
-      .mapPartitions { it =>
-        // stream per-u sorted neighbor groups (dedupe adjacent), sketch each
-        new Iterator[(Long, Int, Long)] {
-          private var pending: (Long, Long) = if (it.hasNext) it.next() else null
-          private var out: Array[(Int, Long)] = Array.empty
-          private var outIdx = 0
-          private var curU = 0L
-          private val vs = scala.collection.mutable.ArrayBuffer.empty[Long]
-
-          private def advance(): Unit = {
-            while (outIdx >= out.length && pending != null) {
-              curU = pending._1
-              vs.clear(); vs += pending._2
-              pending = null
-              while (pending == null && it.hasNext) {
-                val r = it.next()
-                if (r._1 == curU) { if (r._2 != vs.last) vs += r._2 }
-                else pending = r
-              }
-              out = vertexBands(p, vs.toArray)
-              outIdx = 0
-            }
-          }
-          override def hasNext: Boolean = { advance(); outIdx < out.length }
-          override def next(): (Long, Int, Long) = {
-            advance()
-            val (b, k) = out(outIdx); outIdx += 1
-            (curU, b, k)
-          }
-        }
-      }
-      .toDF("id", "band", "key")
-    bandRows
+    ConnectedComponents.neighbourSets(nbrs) { (u, vs) =>
+      vertexBands(params, vs).iterator.map { case (b, k) => (u, b, k) }
+    }.toDF("id", "band", "key")
   }
 
   /** Round-1 edges ∪ vertex-round pairs, deduped — the graph CC runs on

@@ -24,126 +24,37 @@ import org.apache.spark.sql.functions._
   * from-scratch O(allEdges * H); over a whole sweep that is O(E * H_final)
   * instead of O(E * H_final^2).
   *
-  * State is two snapshot tables in a [[SnapshotCatalog]] (so a killed sweep
-  * resumes from the last committed step):
-  *   `<name>_nbrs`  — canonical (a, b) pairs incorporated so far (append)
-  *   `<name>_state` — (u, h, n, mins): per node the neighbor count and the
-  *                    flattened h*c minima array (overwrite per step)
-  *
-  * A step spans TWO commits (nbrs append, then state overwrite), so the
-  * state snapshot is the ATOMIC step record: its manifest carries the hash
-  * count AND the exact nbrs version it incorporated. A crash between the
-  * two commits leaves orphan nbrs rows above the recorded version; the next
-  * advance ignores them (it anti-joins against nbrs AT the recorded
-  * version), re-derives them as part of its delta, and their duplicate
-  * physical rows are harmless downstream (sketchRange deduplicates sorted
-  * neighbor runs; counts are taken from the clean delta, never the table).
+  * State is one snapshot table in a [[SnapshotCatalog]], `<name>_state`
+  * — (u, h, n, mins): per node the neighbor count and the flattened h*c
+  * minima array, overwritten per step. Its manifest records the hash count
+  * and the incorporated band prefix, so each step is ONE atomic commit and
+  * a killed sweep resumes from the last committed step.
   */
 final class VertexSketchCache(spark: SparkSession, catalog: SnapshotCatalog,
     name: String, params: MinHashParams) {
   import spark.implicits._
 
-  private val nbrsTable = s"${name}_nbrs"
   private val stateTable = s"${name}_state"
   private val c = params.bandWidth
   private val HKey = "hashes"
-  private val NbrsVerKey = "nbrs-version"
   private val BandsKey = "bands-prefix"
 
-  /** Latest committed step: (hash count, incorporated nbrs version) from
-    * the state snapshot's manifest — a metadata read, no Spark job.
-    * (0, 0) = empty cache.
-    */
-  private def committedStep: (Int, Int) =
-    catalog.currentVersion(stateTable) match {
-      case 0 => (0, 0)
-      case v =>
-        val p = catalog.snapshot(stateTable, v).properties
-        (p.get(HKey), p.get(NbrsVerKey)) match {
-          case (Some(h), Some(nv)) => (h.toInt, nv.toInt)
-          case (Some(_), None) if p.contains(BandsKey) =>
-            throw new IllegalStateException(
-              s"vertex-cache state table '$stateTable' v$v was advanced " +
-              "under the band-prefix protocol; it cannot be advanced with " +
-              "advance() — wipe the cache directory or keep using " +
-              "advanceByBandPrefix()")
-          case _ => throw new IllegalStateException(
-            s"vertex-cache state table '$stateTable' v$v carries no step " +
-            "properties — it was written by an incompatible version; wipe " +
-            "the cache directory and restart the sweep")
-        }
-    }
+  /** Hash count the cached state was computed with (0 = empty cache). */
+  def storedHashes: Int = committedBandStep._1
 
-  /** Hash count the cached state was computed with (0 = empty cache) —
-    * protocol-agnostic (both the stored-nbrs and the band-prefix
-    * protocols record HKey).
-    */
-  def storedHashes: Int = catalog.currentVersion(stateTable) match {
-    case 0 => 0
-    case v => catalog.snapshot(stateTable, v).properties.get(HKey) match {
-      case Some(h) => h.toInt
-      case None => throw new IllegalStateException(
-        s"vertex-cache state table '$stateTable' v$v carries no hash-count " +
-        "property — incompatible version; wipe the cache directory")
-    }
-  }
-
-  /** Incorporate `currentPairs` (the FULL current canonical pair set — the
-    * cache anti-joins its stored pairs to find the delta itself) at
-    * `numHashes` hash functions, and return the vertex band rows
+  /** Incorporate the pair table's band prefix `[0, numBands)` at
+    * `numHashes` hash functions and return the vertex band rows
     * (id, band, key) — exactly [[VertexShingling.vertexBandRows]] of the
-    * same input, but incrementally.
-    */
-  def advance(currentPairs: DataFrame, numHashes: Int): DataFrame = {
-    val (prevH, prevNbrsVer) = committedStep
-    require(numHashes >= prevH,
-      s"hash count must be monotone: cached $prevH, asked $numHashes")
-    val p = params.copy(numHashes = math.max(numHashes, 1))
-
-    val canonical = currentPairs
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    // incorporated pairs = nbrs AT the version the committed state records,
-    // NOT latest: orphan nbrs rows from a crash between the two commits of
-    // a step must be re-treated as delta (their [0, prevH) contribution was
-    // never merged into the state)
-    val stored =
-      if (prevNbrsVer == 0) None
-      else Some(catalog.read(nbrsTable, prevNbrsVer))
-    val delta = (stored match {
-      case Some(s) => canonical.join(s, Seq("a", "b"), "left_anti")
-      case None => canonical
-    }).localCheckpoint(true)
-    // overwrite when nothing is incorporated yet: a crash before the FIRST
-    // state commit leaves orphan nbrs snapshots, and overwrite drops their
-    // files from the new version instead of carrying duplicates forward
-    val nbrsSnap = catalog.commit(nbrsTable, delta,
-      operation = if (prevNbrsVer > 0) "append" else "overwrite")
-    val allPairs = catalog.read(nbrsTable, nbrsSnap.version)
-    advanceCore(delta, allPairs, prevH, numHashes, p,
-      Map(HKey -> numHashes.toString,
-        NbrsVerKey -> nbrsSnap.version.toString))
-  }
-
-  /** [[advance]] for callers whose pair set is ITSELF an append-only
+    * prefix's pairs, but incrementally. The pair table is an append-only
     * band-partitioned log of canonical distinct (a, b) pairs stored under
     * their first-seen band — the sweep's incremental pair table
-    * ([[HashSweep.appendPairs]]). The step's delta is then a pruned
-    * `band in [prevBands, numBands)` read, so the stored-nbrs machinery
-    * disappears: no canonicalize+distinct exchange of the full pair set,
-    * no anti-join against a stored copy, no second (nbrs) snapshot commit
-    * — ONE atomic state commit per step records both the hash count and
-    * the incorporated band prefix (closing the two-commit crash window
-    * the nbrs protocol needed recovery logic for; VERDICT r05 ask #4).
+    * ([[HashSweep]]), so the step's delta is a pruned
+    * `band in [prevBands, numBands)` read and ONE atomic state commit
+    * records both the hash count and the incorporated band prefix.
     *
     * Precondition (the pair table's invariant, marker-committed by the
     * caller): rows are canonical a < b, distinct ACROSS bands, and the
     * `[0, numBands)` prefix is fully committed before this call.
-    * A cache previously advanced under the stored-nbrs protocol cannot
-    * switch (fails loudly) — the two protocols track incorporation
-    * differently.
     *
     * @param pairTable the band-partitioned pair table (None = no pairs yet)
     */
@@ -160,40 +71,9 @@ final class VertexSketchCache(spark: SparkSession, catalog: SnapshotCatalog,
         .select("a", "b"))
       .getOrElse(spark.range(0)
         .select(col("id").as("a"), col("id").as("b")))
-    advanceCore(slice(prevBands, numBands), slice(0, numBands),
-      prevH, numHashes, p,
-      Map(HKey -> numHashes.toString, BandsKey -> numBands.toString))
-  }
+    val delta = slice(prevBands, numBands)
+    val allPairs = slice(0, numBands)
 
-  /** Latest committed (hash count, incorporated band prefix) for the
-    * band-prefix protocol; (0, 0) = empty cache. Fails loudly on a cache
-    * written by the stored-nbrs protocol (no silent protocol mixing).
-    */
-  private def committedBandStep: (Int, Int) =
-    catalog.currentVersion(stateTable) match {
-      case 0 => (0, 0)
-      case v =>
-        val p = catalog.snapshot(stateTable, v).properties
-        (p.get(HKey), p.get(BandsKey)) match {
-          case (Some(h), Some(nb)) => (h.toInt, nb.toInt)
-          case (Some(_), None) => throw new IllegalStateException(
-            s"vertex-cache state table '$stateTable' v$v was advanced " +
-            "under the stored-nbrs protocol; it cannot be advanced by " +
-            "band prefix — wipe the cache directory or keep using advance()")
-          case _ => throw new IllegalStateException(
-            s"vertex-cache state table '$stateTable' v$v carries no step " +
-            "properties — it was written by an incompatible version; wipe " +
-            "the cache directory and restart the sweep")
-        }
-    }
-
-  /** Shared step core: sketch the delta for the existing hash range,
-    * merge into cached minima, sketch all pairs for the new hash range,
-    * commit ONE state snapshot carrying `props`, emit band rows.
-    */
-  private def advanceCore(delta: DataFrame, allPairs: DataFrame,
-      prevH: Int, numHashes: Int, p: MinHashParams,
-      props: Map[String, String]): DataFrame = {
     // minima over the delta neighbors for the EXISTING hash range [0, prevH)
     val deltaSk =
       if (prevH == 0) spark.emptyDataFrame
@@ -239,11 +119,31 @@ final class VertexSketchCache(spark: SparkSession, catalog: SnapshotCatalog,
             concatUdf(col("mins"), col("nmins")).as("mins"))
       }
 
+    // ONE atomic commit records the step: hash count + band prefix
     val stateSnap = catalog.commit(stateTable,
       state2.withColumn("h", lit(numHashes)).select("u", "h", "n", "mins"),
-      properties = props)
+      properties = Map(HKey -> numHashes.toString,
+        BandsKey -> numBands.toString))
     emitBands(catalog.read(stateTable, stateSnap.version), p, numHashes)
   }
+
+  /** Latest committed (hash count, incorporated band prefix) from the
+    * state snapshot's manifest — a metadata read, no Spark job.
+    * (0, 0) = empty cache.
+    */
+  private def committedBandStep: (Int, Int) =
+    catalog.currentVersion(stateTable) match {
+      case 0 => (0, 0)
+      case v =>
+        val p = catalog.snapshot(stateTable, v).properties
+        (p.get(HKey), p.get(BandsKey)) match {
+          case (Some(h), Some(nb)) => (h.toInt, nb.toInt)
+          case _ => throw new IllegalStateException(
+            s"vertex-cache state table '$stateTable' v$v carries no step " +
+            "properties — it was written by an incompatible version; wipe " +
+            "the cache directory and restart the sweep")
+        }
+    }
 
   /** (u, v) directed expansion of canonical pairs. */
   private def directed(pairs: DataFrame): Dataset[(Long, Long)] =
@@ -252,34 +152,14 @@ final class VertexSketchCache(spark: SparkSession, catalog: SnapshotCatalog,
       .as[(Long, Long)]
 
   /** Per-u (setSize, flattened minima for hash range [from, until)) via
-    * one shuffle + sorted streaming groups (same shape as
-    * [[VertexShingling.vertexBandRows]]).
+    * the graph's grouped reduce ([[ConnectedComponents.neighbourSets]]).
     */
   private def sketchRange(nbrs: Dataset[(Long, Long)], p: MinHashParams,
-      from: Int, until: Int): Dataset[(Long, Int, Array[Long])] = {
-    nbrs
-      .repartition(col("u"))
-      .sortWithinPartitions("u", "v")
-      .mapPartitions { it =>
-        new Iterator[(Long, Int, Array[Long])] {
-          private var pending: (Long, Long) = if (it.hasNext) it.next() else null
-          private val vs = scala.collection.mutable.ArrayBuffer.empty[Long]
-          override def hasNext: Boolean = pending != null
-          override def next(): (Long, Int, Array[Long]) = {
-            val u = pending._1
-            vs.clear(); vs += pending._2
-            pending = null
-            while (pending == null && it.hasNext) {
-              val r = it.next()
-              if (r._1 == u) { if (r._2 != vs.last) vs += r._2 }
-              else pending = r
-            }
-            (u, vs.length,
-              VertexShingling.vertexMinimaRange(p, vs.toArray, from, until))
-          }
-        }
-      }
-  }
+      from: Int, until: Int): Dataset[(Long, Int, Array[Long])] =
+    ConnectedComponents.neighbourSets(nbrs) { (u, vs) =>
+      Iterator.single(
+        (u, vs.length, VertexShingling.vertexMinimaRange(p, vs, from, until)))
+    }
 
   /** Band rows from the cached state: gate |N(u)| >= c, pack per hash. */
   private def emitBands(state: DataFrame, p: MinHashParams,

@@ -77,11 +77,13 @@ class PackedJaccardGateSpec extends AnyFunSuite with SparkSpec {
     val docs = DedupPipeline.extractDocs(df)
     val bands = DedupPipeline.signatures(spark, docs, p)
     val (raw, _) = DedupPipeline.candidatePairs(spark, bands, Int.MaxValue)
-    val verified = DedupPipeline.verifyPairs(spark, raw, docs, p, 0.5)
+    val (verified, cleanup) =
+      DedupPipeline.verifyPairsManaged(spark, raw, docs, p, 0.5)
     val plan = verified.queryExecution.executedPlan.toString
     assert(plan.contains("packed_jaccard_gate"),
       s"verify must run the native gate:\n$plan")
     val got = verified.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    cleanup()
     val idOf = docs.select("url", "id").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = graft.core.SerialOracle

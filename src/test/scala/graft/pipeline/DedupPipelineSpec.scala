@@ -25,9 +25,10 @@ class DedupPipelineSpec extends AnyFunSuite with SparkSpec {
     val bandRows = DedupPipeline.signatures(spark, docs, cfg.params)
     val (rawPairs, _) = DedupPipeline.candidatePairs(spark, bandRows,
       cfg.maxBucketSize, saltBlockSize = cfg.saltBlockSize)
-    val pairs = DedupPipeline.verifyPairs(spark, rawPairs, docs, cfg.params,
-      cfg.jaccardThreshold)
+    val (pairs, cleanup) = DedupPipeline.verifyPairsManaged(spark, rawPairs,
+      docs, cfg.params, cfg.jaccardThreshold)
     val gotPairs = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    cleanup()
     assert(gotPairs == want.pairs, "candidate pairs differ from oracle")
 
     val clusters = DedupPipeline.run(spark, df, cfg)
@@ -87,6 +88,15 @@ class DedupPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(hot0.isEmpty)
     assert(hot.count() > 0, "expected hot buckets above the cap")
     assert(capped.count() < unCapped.count())
+    // exact capped semantics, computed serially: every bucket of at most 30
+    // members emits all its canonical pairs, larger buckets emit none
+    val want = bandRows.collect()
+      .groupBy(r => (r.getAs[Int]("band"), r.getAs[Long]("key")))
+      .values.filter(_.length <= 30)
+      .map(_.map(_.getAs[Long]("id")).distinct.sorted)
+      .flatMap(ids => ids.combinations(2).map(c => (c(0), c(1))))
+      .toSet
+    assert(capped.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want)
   }
 
   test("salted hot-band pairs are LOSSLESS and spread over multiple groups") {

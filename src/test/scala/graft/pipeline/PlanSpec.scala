@@ -12,41 +12,39 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
 
   private val p = MinHashParams(numHashes = 8)
 
-  test("candidate-pair self-join reuses one exchange for both sides") {
-    // small inputs broadcast (fine); the at-scale shape is a shuffled join —
-    // force it and assert the (band, key) exchange is planned once. With
-    // AQE on, the same dedup happens at runtime via shuffle-stage reuse;
-    // the static rule is only visible with AQE off.
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val pages = Pages.toDS(spark, PagesGen.small).toDF()
-      val docs = DedupPipeline.extractDocs(pages)
-      val bands = DedupPipeline.signatures(spark, docs, p)
-      val (pairs, _) = DedupPipeline.candidatePairs(spark, bands, Int.MaxValue,
-        selfJoin = true)
-      val plan = pairs.queryExecution.executedPlan.toString
-      assert(plan.contains("ReusedExchange"),
-        s"expected ReusedExchange in:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-  }
+  test("grouped reduces plan one exchange: bucket pair emission, CC star steps") {
+    def partitionings(plan: String): Seq[String] =
+      "hashpartitioning\\(([^)]*)\\)".r.findAllMatchIn(plan)
+        .map(_.group(1)).toSeq
+    def exchanges(plan: String): Int = "Exchange ".r.findAllMatchIn(plan).size
 
-  test("group-emit and self-join pair strategies produce identical pairs") {
+    // unsalted pair generation: the explicit (band, key) repartition at the
+    // pair-gen width satisfies the grouped reduce, so the only other
+    // exchange is the cross-band distinct's, above it
     val pages = Pages.toDS(spark, PagesGen.small).toDF()
     val docs = DedupPipeline.extractDocs(pages)
     val bands = DedupPipeline.signatures(spark, docs, p)
-      .persist()
-    def setOf(selfJoin: Boolean, cap: Int) =
-      DedupPipeline.candidatePairs(spark, bands, cap, selfJoin)._1
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(setOf(false, Int.MaxValue) == setOf(true, Int.MaxValue))
-    assert(setOf(false, 5) == setOf(true, 5)) // capped semantics match too
-    bands.unpersist()
+    val (pairs, _) = DedupPipeline.candidatePairs(spark, bands, Int.MaxValue)
+    val plan = pairs.queryExecution.executedPlan.toString
+    val n = math.max(2 * spark.sparkContext.defaultParallelism,
+      spark.sessionState.conf.numShufflePartitions)
+    val parts = partitionings(plan)
+    assert(exchanges(plan) == 2 && parts.size == 2, s"two exchanges in:\n$plan")
+    assert(parts(0).matches("a#\\d+L, b#\\d+L, \\d+"),
+      s"distinct exchange on (a, b) expected on top in:\n$plan")
+    assert(parts(1).matches(s"band#\\d+, key#\\d+L, $n"),
+      s"one (band, key) exchange at $n partitions expected in:\n$plan")
+
+    // one CC star step = one shuffle by node
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L), (1L, 5L)).toDS()
+    for ((name, step) <- Seq(
+        "largeStar" -> ConnectedComponents.largeStar(spark, edges),
+        "smallStar" -> ConnectedComponents.smallStar(spark, edges))) {
+      val stepPlan = step.queryExecution.executedPlan.toString
+      assert(exchanges(stepPlan) == 1 && partitionings(stepPlan).size == 1,
+        s"$name must plan exactly one exchange:\n$stepPlan")
+    }
   }
 
   test("parquet scan prunes columns: signature stage reads only url/html") {

@@ -24,38 +24,10 @@ class VertexSketchCacheSpec extends AnyFunSuite with SparkSpec {
       .toSeq == Seq(3L, 3L))
   }
 
-  test("incremental advance == from-scratch vertex band rows at every step") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vcache").toString
-    val cache = new VertexSketchCache(spark,
-      new SnapshotCatalog(spark, dir), "t", p)
-
-    val rng = new scala.util.Random(31)
-    val allEdges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var h = 3
-    for (step <- 0 until 4) {
-      // grow the graph (some duplicates / reversed edges on purpose) and
-      // the hash count, like a real sweep step does
-      val fresh = (0 until 15 + 5 * step).map { _ =>
-        val a = rng.nextLong() % 500
-        val b = rng.nextLong() % 500
-        (a, b)
-      }.filter { case (a, b) => a != b }
-      allEdges ++= fresh
-      h += step // steps of 0,1,2,3 extra hashes — includes the no-new-hash case
-      val edges = allEdges.toSeq.toDF("a", "b")
-      val got = bandsSet(cache.advance(edges, h))
-      val want = bandsSet(VertexShingling.vertexBandRows(spark, edges,
-        p.copy(numHashes = h)))
-      assert(got == want, s"step $step (h=$h) diverged from full re-sketch")
-    }
-    assert(cache.storedHashes == h)
-  }
-
-  test("band-prefix advance == from-scratch at every step; protocol mixing " +
-      "fails loudly") {
-    // the HashSweep fast path (r06): the pair log is band-partitioned
-    // canonical distinct pairs under their first-seen band; each step's
-    // delta is a pruned band-range read and the step is ONE state commit
+  test("band-prefix advance == from-scratch at every step") {
+    // the pair log is band-partitioned canonical distinct pairs under their
+    // first-seen band; each step's delta is a pruned band-range read and
+    // the step is ONE state commit
     val dir = java.nio.file.Files.createTempDirectory("graft-vcacheB").toString
     val cache = new VertexSketchCache(spark,
       new SnapshotCatalog(spark, dir), "t", p)
@@ -86,52 +58,25 @@ class VertexSketchCacheSpec extends AnyFunSuite with SparkSpec {
       assert(got == want, s"step $step (bands=$bands, h=$h) diverged")
     }
     assert(cache.storedHashes == h)
-    // a band-prefix cache refuses the stored-nbrs protocol (and vice versa)
-    val e = intercept[IllegalStateException] {
-      cache.advance(log.toSeq.map(t => (t._1, t._2)).toDF("a", "b"), h + 1)
-    }
-    assert(e.getMessage.contains("band-prefix"))
-  }
-
-  test("crash between nbrs and state commits: resume ignores orphan nbrs rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vcache3").toString
-    val cat = new SnapshotCatalog(spark, dir)
-    val e1 = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")
-    val orphan = Seq((3L, 4L), (5L, 6L)).toDF("a", "b")
-    val e2 = Seq((1L, 2L), (2L, 3L), (4L, 5L), (3L, 4L), (5L, 6L), (6L, 7L))
-      .toDF("a", "b")
-
-    val c1 = new VertexSketchCache(spark, cat, "t", p)
-    c1.advance(e1, 4)
-    // simulate a crashed advance: the nbrs append of the next step landed
-    // but the process died before the state commit — the state snapshot
-    // still records the e1-era nbrs version
-    cat.commit("t_nbrs", orphan, operation = "append")
-
-    val c2 = new VertexSketchCache(spark, cat, "t", p)
-    assert(c2.storedHashes == 4,
-      "orphan nbrs rows must not advance the committed step")
-    val got = bandsSet(c2.advance(e2, 6))
-    val want = bandsSet(VertexShingling.vertexBandRows(spark, e2,
-      p.copy(numHashes = 6)))
-    assert(got == want,
-      "orphan pairs' [0, prevH) contribution was skipped on resume")
   }
 
   test("a reopened cache resumes from the committed state") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vcache2").toString
     val cat = new SnapshotCatalog(spark, dir)
-    val e1 = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")
-    val e2 = Seq((1L, 2L), (2L, 3L), (4L, 5L), (3L, 4L), (5L, 6L)).toDF("a", "b")
+    // pair log: band 0 committed before the "restart", band 1 after
+    val band0 = Seq((1L, 2L, 0), (2L, 3L, 0), (4L, 5L, 0))
+    val band1 = Seq((3L, 4L, 1), (5L, 6L, 1))
 
     val c1 = new VertexSketchCache(spark, cat, "t", p)
-    c1.advance(e1, 4)
+    c1.advanceByBandPrefix(Some(band0.toDF("a", "b", "band")), 1, 4)
     // "restart": a brand-new instance over the same catalog
     val c2 = new VertexSketchCache(spark, cat, "t", p)
     assert(c2.storedHashes == 4)
-    val got = bandsSet(c2.advance(e2, 6))
-    val want = bandsSet(VertexShingling.vertexBandRows(spark, e2,
-      p.copy(numHashes = 6)))
+    val log = band0 ++ band1
+    val got = bandsSet(c2.advanceByBandPrefix(
+      Some(log.toDF("a", "b", "band")), 2, 6))
+    val want = bandsSet(VertexShingling.vertexBandRows(spark,
+      log.map(e => (e._1, e._2)).toDF("a", "b"), p.copy(numHashes = 6)))
     assert(got == want)
   }
 }
