@@ -63,6 +63,19 @@ final case class MinHashParams(
     if (randoms.length == 2 * numHashes) this
     else copy(randoms = java.util.Arrays.copyOf(randoms, 2 * numHashes))
 
+  /** Stable digest of the hash family (k, c, P and every (a, b) random;
+    * not `numHashes`) plus the caller's `extra` fields — what persisted
+    * sketch rows depend on, stored in snapshot manifests so a resume under
+    * a different family fails or recomputes instead of mixing sketch spaces.
+    */
+  def fingerprint(extra: String = ""): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(s"k=$kmerLen;c=$bandWidth;p=$prime;$extra".getBytes("UTF-8"))
+    val buf = java.nio.ByteBuffer.allocate(8)
+    randoms.foreach { r => buf.clear(); buf.putLong(r); md.update(buf.array()) }
+    md.digest().take(12).map(x => f"$x%02x").mkString
+  }
+
   // equality and printing by CONTENT: `randoms` is an Array, whose default
   // equality is reference identity. Catalyst compares plan expressions with
   // `==` (exchange reuse, `sameResult`) and prints their arguments in

@@ -61,9 +61,6 @@ final case class DedupConfig(
       * count); < 1 samples the band rows — shuffle-light at scale, both
       * error modes lossless (see [[DedupPipeline.candidatePairs]]). */
     saltDetectFraction: Double = 0.05,
-    /** verify id = xxhash64(url) is collision-free (one count+countDistinct
-      * pass over docs) and fail loudly otherwise. */
-    checkIdCollisions: Boolean = true,
     /** CC finishes with serial union-find on the driver when the verified
       * edge set is at or below this count (~16 B/edge on the wire, so the
       * default bounds the collect at ~134 MB / a few hundred MB of driver
@@ -75,25 +72,16 @@ final case class DedupConfig(
     outputDir: Option[String] = None
 ) {
   /** Stable fingerprint of every config field that determines stage
-    * CONTENTS (params + randoms identity, threshold, cluster/bucket policy,
-    * densification rounds). Salting knobs, `ccDriverFinishMaxEdges` and
-    * `checkIdCollisions` are excluded — they change
-    * distribution/validation, never output — as is `outputDir`. Stored in each stage snapshot's manifest; a resume with a
+    * CONTENTS (hash family, h, threshold, cluster/bucket policy,
+    * densification rounds). Salting knobs and `ccDriverFinishMaxEdges`
+    * are excluded — they change distribution, never output — as is
+    * `outputDir`. Stored in each stage snapshot's manifest; a resume with a
     * different fingerprint recomputes instead of silently returning stage
     * output computed under the old config.
     */
-  def fingerprint: String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.update((s"k=${params.kmerLen};c=${params.bandWidth};" +
-      s"h=${params.numHashes};p=${params.prime};tau=$jaccardThreshold;" +
-      s"minc=$minClusterSize;maxb=$maxBucketSize;si=$shinglingIterations")
-      .getBytes("UTF-8"))
-    val buf = java.nio.ByteBuffer.allocate(8)
-    params.randoms.foreach { r =>
-      buf.clear(); buf.putLong(r); md.update(buf.array())
-    }
-    md.digest().take(12).map(b => f"$b%02x").mkString
-  }
+  def fingerprint: String = params.fingerprint(
+    s"h=${params.numHashes};tau=$jaccardThreshold;minc=$minClusterSize;" +
+      s"maxb=$maxBucketSize;si=$shinglingIterations")
 }
 
 final case class StageMetrics(stage: String, rows: Long, millis: Long,
@@ -186,6 +174,20 @@ object DedupPipeline {
   def candidatePairs(spark: SparkSession, bandRows: DataFrame,
       maxBucketSize: Int, saltBlockSize: Int = Int.MaxValue,
       saltDetectFraction: Double = 1.0): (DataFrame, DataFrame) = {
+    val (tagged, dropped) = bandTaggedPairs(spark, bandRows, maxBucketSize,
+      saltBlockSize, saltDetectFraction)
+    // the band tag is pruned by Catalyst before the distinct's exchange
+    (tagged.select("a", "b").distinct(), dropped)
+  }
+
+  /** [[candidatePairs]] before the cross-band distinct: every bucket pair
+    * as (band, a, b), tagged with the band it collides in — the provenance
+    * the sweep's incremental pair table keeps ([[HashSweep]]: each pair
+    * under its first-seen band). Returns (tagged, droppedBuckets).
+    */
+  private[pipeline] def bandTaggedPairs(spark: SparkSession,
+      bandRows: DataFrame, maxBucketSize: Int, saltBlockSize: Int,
+      saltDetectFraction: Double): (DataFrame, DataFrame) = {
     require(saltBlockSize >= 2 || saltBlockSize == Int.MaxValue,
       s"saltBlockSize must be >= 2, got $saltBlockSize")
     require(saltDetectFraction > 0.0 && saltDetectFraction <= 1.0,
@@ -196,7 +198,7 @@ object DedupPipeline {
       else sized.where(col("n") > maxBucketSize)
 
     val pairs = if (saltBlockSize == Int.MaxValue) {
-      groupEmitPairs(spark, bandRows, maxBucketSize).distinct()
+      groupEmitPairsTagged(spark, bandRows, maxBucketSize)
     } else {
       // Hot-key detection. At saltDetectFraction = 1 it is exact (a full
       // groupBy count — a shuffle nearly as large as the band rows
@@ -227,7 +229,7 @@ object DedupPipeline {
         "— this is not skew, it is the typical bucket size; raise " +
         "saltBlockSize instead of salting everything")
       if (hot.isEmpty) // common no-skew case
-        groupEmitPairs(spark, bandRows, maxBucketSize).distinct()
+        groupEmitPairsTagged(spark, bandRows, maxBucketSize)
       else {
         import spark.implicits._
         val hotKeys = hot.map(r => (r.getInt(0), r.getLong(1), r.getInt(2)))
@@ -239,7 +241,7 @@ object DedupPipeline {
         // (lossless) salting: classification above used the sampled size
         // ESTIMATE, so enforce the cap on the salted path with EXACT counts
         // — a bucket whose true size exceeds the cap is dropped here exactly
-        // as groupEmitPairs drops it on the cold path, keeping emission
+        // as groupEmitPairsTagged drops it on the cold path, keeping emission
         // consistent with the exact `dropped` metric. Hot buckets are few by
         // the definition of skew, so the exact count is a small extra job.
         val hotRows =
@@ -251,9 +253,8 @@ object DedupPipeline {
               .select("band", "key")
             hotRows0.join(broadcast(withinCap), Seq("band", "key"))
           }
-        groupEmitPairs(spark, cold, maxBucketSize)
+        groupEmitPairsTagged(spark, cold, maxBucketSize)
           .union(saltedPairs(spark, hotRows))
-          .distinct()
       }
     }
     (pairs, dropped)
@@ -272,28 +273,21 @@ object DedupPipeline {
     math.max(spark.sparkContext.defaultParallelism * 2,
       spark.sessionState.conf.numShufflePartitions)
 
-  // Stage cost anatomy at 4M docs / 41 hashes / local[32] (measured): the
-  // sorted group emission is 19.7 s and the cross-band pair `distinct` only
-  // ~7 s more, despite 204M pre-distinct pair emissions collapsing to 7.4M
-  // (near-dup pairs collide in ~27 of 41 bands; the hash aggregate's
-  // map-side partial dedup carries it). Emitting each pair from a single
-  // band would need every bucket row to carry the doc's full signature
-  // (16x primary-shuffle inflation) or hashed bucket ids (not exact) —
-  // both rejected; the duplication is inherent to high-similarity corpora.
-  private def groupEmitPairs(spark: SparkSession, bandRows: DataFrame,
-      maxBucketSize: Int): DataFrame =
-    // the band tag is pruned by Catalyst before the shuffle-back — free
-    groupEmitPairsTagged(spark, bandRows, maxBucketSize).select("a", "b")
-
-  /** [[groupEmitPairs]] keeping the ORIGIN BAND on each emitted pair —
-    * the provenance the sweep's incremental pair table needs
-    * ([[HashSweep]]: pairs stored under their first-seen band). Memory is
-    * bounded by one bucket's id array, never by its n² pair count, which is
-    * streamed; a hot bucket emits its pairs serially in one task (lossless
-    * — the salted decomposition applies only on the untagged path, where
-    * provenance is not needed).
+  /** Per-bucket pair emission keeping the ORIGIN BAND on each pair.
+    * Memory is bounded by one bucket's id array, never by its n² pair
+    * count, which is streamed; a bucket that is not salted emits its pairs
+    * serially in one task.
+    *
+    * Stage cost anatomy at 4M docs / 41 hashes / local[32] (measured): the
+    * sorted group emission is 19.7 s and the cross-band pair `distinct`
+    * only ~7 s more, despite 204M pre-distinct pair emissions collapsing to
+    * 7.4M (near-dup pairs collide in ~27 of 41 bands; the hash aggregate's
+    * map-side partial dedup carries it). Emitting each pair from a single
+    * band would need every bucket row to carry the doc's full signature
+    * (16x primary-shuffle inflation) or hashed bucket ids (not exact) —
+    * both rejected; the duplication is inherent to high-similarity corpora.
     */
-  private[pipeline] def groupEmitPairsTagged(spark: SparkSession,
+  private def groupEmitPairsTagged(spark: SparkSession,
       bandRows: DataFrame, maxBucketSize: Int): DataFrame = {
     import spark.implicits._
     // reused across groups: each task deserializes its own closure copy
@@ -330,7 +324,8 @@ object DedupPipeline {
     * rows of the hot buckets only. Each id lands in block blk = blockOf(id)
     * and is replicated to the nblocks salted groups that may pair it; group
     * (gi < gj) cross-products its two blocks, group (g, g) emits the
-    * triangle of block g — each bucket pair appears in exactly ONE group.
+    * triangle of block g — each bucket pair appears in exactly ONE group,
+    * emitted as (band, a, b).
     */
   private[pipeline] def saltedPairs(spark: SparkSession,
       hotRows: DataFrame): DataFrame = {
@@ -343,7 +338,7 @@ object DedupPipeline {
         col("band"), col("key"), col("gi"), col("gj"))
       .groupBy(col("band"), col("key"), col("gi"), col("gj"))
       .as[(Int, Long, Int, Int), (Int, Long, Int, Int, Int, Long)]
-      .flatMapSortedGroups(col("blk"), col("id")) { case ((_, _, gi, gj), rows) =>
+      .flatMapSortedGroups(col("blk"), col("id")) { case ((band, _, gi, gj), rows) =>
         // rows sorted by (blk, id) split the group into its gi block and
         // its gj block, each ascending
         leftBuf.clear(); rightBuf.clear()
@@ -357,15 +352,15 @@ object DedupPipeline {
             i <- left.indices.iterator
             j <- (i + 1 until left.length).iterator
             if left(i) != left(j)
-          } yield (left(i), left(j))
+          } yield (band, left(i), left(j))
         else // cross product of the two blocks, canonical order
           for {
             i <- left.indices.iterator
             j <- right.indices.iterator
             if left(i) != right(j)
-          } yield (math.min(left(i), right(j)), math.max(left(i), right(j)))
+          } yield (band, math.min(left(i), right(j)), math.max(left(i), right(j)))
       }
-      .toDF("a", "b")
+      .toDF("band", "a", "b")
   }
 
   /** The salted replication (exposed for the skew PlanSpec): each hot row
@@ -447,15 +442,15 @@ object DedupPipeline {
     if (cfg.outputDir.isEmpty)
       docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    if (cfg.checkIdCollisions) {
-      val r = docs.agg(count(lit(1)), countDistinct(col("id"))).head()
-      val (total, uniq) = (r.getLong(0), r.getLong(1))
-      if (total != uniq)
-        throw new IllegalStateException(
-          s"xxhash64(url) id collisions detected: $total docs, $uniq " +
-          "distinct ids — re-salt the id expression in extractDocs")
-      io.note("docs", Map("id_collisions" -> 0L, "docs" -> total))
-    }
+    // verify id = xxhash64(url) is collision-free (one count+countDistinct
+    // pass over docs) and fail loudly otherwise
+    val r = docs.agg(count(lit(1)), countDistinct(col("id"))).head()
+    val (total, uniq) = (r.getLong(0), r.getLong(1))
+    if (total != uniq)
+      throw new IllegalStateException(
+        s"xxhash64(url) id collisions detected: $total docs, $uniq " +
+        "distinct ids — re-salt the id expression in extractDocs")
+    io.note("docs", Map("id_collisions" -> 0L, "docs" -> total))
 
     val bandRows = io.stage("signatures") {
       signatures(spark, docs, cfg.params)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.{MinHasher, MinHashParams}
+import graft.core.MinHashParams
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * The signature optimization carried over is I1 (incremental sketches,
   * `shingling_cluster_generator_optimized.cpp:469-547`): iteration h
   * computes band rows ONLY for the hash indices not yet materialized and
-  * appends them to a band-row stage table partitioned by hash index; both
-  * clusterings then read the prefix they need. At 10^12 rows this is the
+  * appends them to a band-row snapshot table; both clusterings then read
+  * the prefix they need. At 10^12 rows this is the
   * difference between O(h_final) and O(h_final^2) sketch work.
   */
 object HashSweep {
@@ -33,14 +33,27 @@ object HashSweep {
   final case class SweepResult(steps: Seq[SweepStep], converged: Boolean,
       assignments: DataFrame)
 
-  /** @param bandDir stage dir for the incremental band-row table
-    *                (written as bandDir/h=<i>/ per hash index)
+  /** Manifest property keys of the sweep's tables: the hash-family
+    * fingerprint every table's latest snapshot carries, and the band prefix
+    * `[0, n)` that a `bands` / `pairs` append commit completes.
+    */
+  private[pipeline] val FamilyKey = "hash-family"
+  private val PrefixKey = "bands-prefix"
+
+  /** @param bandDir [[SnapshotCatalog]] warehouse of the sweep's tables:
+    *                `bands` (id, band, key) — band rows appended per hash
+    *                index; `pairs` (a, b, band) — distinct candidate pairs
+    *                under their first-seen band; and, with
+    *                shinglingIterations = 2, the vertex caches
+    *                `test_state` / `base_state`. Every commit carries the
+    *                hash-family fingerprint: a restart under another family,
+    *                or over a directory in the older partitioned-parquet
+    *                layout, fails loudly
     * @param shinglingIterations 1 = k-mer round only; 2 = add the vertex
     *                round per step (reference default), with per-vertex
     *                sketches updated incrementally across steps via
     *                [[VertexSketchCache]] (I2) — one cache per trajectory
-    *                (test at h, base at h-delta), persisted under
-    *                `<bandDir>.vertex`
+    *                (test at h, base at h-delta)
     * @param saltBlockSize / saltDetectFraction hot-band decomposition for
     *                the per-step pair generation, same semantics as
     *                [[DedupConfig]] — the sweep is the production driver
@@ -67,162 +80,83 @@ object HashSweep {
     require(startHashes > delta, "test must have more hashes than base")
     require(startHashes <= maxHashes,
       s"startHashes=$startHashes > maxHashes=$maxHashes: nothing to sweep")
+
+    // every entry of the warehouse is a snapshot table; anything else (the
+    // older partitioned layout's band=<i> directories and sidecar files)
+    // is refused, never adopted
+    val entries = Option(new java.io.File(bandDir).listFiles())
+      .getOrElse(Array.empty)
+    entries.find(f => !new java.io.File(f, "metadata").isDirectory)
+      .foreach { f =>
+        throw new IllegalStateException(
+          s"$bandDir holds ${f.getName}, which is not a snapshot table " +
+          "(an older partitioned band-table layout?); clean it or use a " +
+          "fresh bandDir")
+      }
+    // every persisted row is only valid under the hash family it was
+    // computed with — a restart under another family would silently mix
+    // sketch spaces. Each table's latest snapshot carries the family
+    // fingerprint, so cleaning one table cannot unlock the others.
+    val cat = new SnapshotCatalog(spark, bandDir)
+    val family = baseParams.fingerprint()
+    for (t <- entries.map(_.getName) if cat.exists(t)) {
+      val stored = cat.snapshot(t, cat.currentVersion(t))
+        .properties.getOrElse(FamilyKey, "none")
+      if (stored != family) throw new IllegalStateException(
+        s"$bandDir/$t was materialized under a different hash family " +
+        s"(stored $stored, current $family) — its rows are not valid " +
+        "for these params; clean bandDir or use a fresh one")
+    }
+
     val docs = DedupPipeline.extractDocs(pages)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val pairDir = s"$bandDir.pairs"
-
-    // the band table, pair table and vertex caches are only valid under
-    // the hash family they were computed with — a restart with different
-    // params would silently mix rows from a DIFFERENT sketch space.
-    // Fingerprint the family on first write IN EVERY PERSISTENT SIBLING
-    // (a user who cleans only bandDir after a mismatch must not be able
-    // to resume against a stale pair table or vertex cache); mismatch on
-    // restart fails loudly (same invalidation discipline as the stage
-    // snapshots' config fingerprint, see DedupConfig.fingerprint).
-    {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      md.update((s"k=${baseParams.kmerLen};c=${baseParams.bandWidth};" +
-        s"p=${baseParams.prime};si=$shinglingIterations").getBytes("UTF-8"))
-      val buf = java.nio.ByteBuffer.allocate(8)
-      baseParams.randoms.foreach { r =>
-        buf.clear(); buf.putLong(r); md.update(buf.array())
-      }
-      val fp = md.digest().take(12).map(b => f"$b%02x").mkString
-      for (dir <- Seq(bandDir, pairDir, s"$bandDir.vertex")) {
-        val fpFile = java.nio.file.Paths.get(dir, ".params-fingerprint")
-        if (java.nio.file.Files.exists(fpFile)) {
-          val stored = new String(
-            java.nio.file.Files.readAllBytes(fpFile), "UTF-8").trim
-          if (stored != fp) throw new IllegalStateException(
-            s"$dir was materialized under a different hash " +
-            s"family/config (stored $stored, current $fp) — its rows " +
-            "are not valid for these params; clean bandDir AND its " +
-            ".pairs/.vertex siblings, or use a fresh bandDir")
-        } else {
-          java.nio.file.Files.createDirectories(fpFile.getParent)
-          java.nio.file.Files.write(fpFile, fp.getBytes("UTF-8"))
-        }
-      }
+    // Append-only prefix tables: each increment is ONE append commit whose
+    // manifest records the band prefix it completes, so a killed append is
+    // invisible and is simply re-derived on restart.
+    def committedBands(t: String): Int =
+      if (!cat.exists(t)) 0
+      else cat.snapshot(t, cat.currentVersion(t)).properties(PrefixKey).toInt
+    def extend(t: String, until: Int)(rows: Int => DataFrame): Unit = {
+      val from = committedBands(t)
+      if (until > from) cat.commit(t, rows(from), operation = "append",
+        properties = Map(FamilyKey -> family, PrefixKey -> until.toString))
     }
 
-    // Marker-committed partitioned appends (restart durability): a
-    // partitioned parquet append is not atomic across tasks, so each
-    // appended band index is committed by a `.band_<i>_done` marker;
-    // partitions without a marker are torn writes from a kill and are
-    // dropped + re-derived on restart. `adoptUnmarked` grandfathers a
-    // marker-less BAND directory written before the protocol existed
-    // (its contiguous prefix is adopted and markers back-filled); the
-    // pair table has carried markers from birth, so an unmarked pair
-    // partition is always a tear.
-    def commitMarkers(dir: String, from: Int, until: Int): Unit = {
-      new java.io.File(dir).mkdirs()
-      (from until until).foreach { b =>
-        val m = new java.io.File(dir, s".band_${b}_done")
-        require(m.createNewFile() || m.exists(), s"cannot commit marker $m")
-      }
-    }
-    def committedPrefix(dir: String, adoptUnmarked: Boolean): Int = {
-      val f = new java.io.File(dir)
-      def partDirs = Option(f.listFiles()).getOrElse(Array.empty)
-        .filter(d => d.isDirectory && d.getName.startsWith("band="))
-      var done = Option(f.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.matches("\\.band_\\d+_done"))
-        .map(_.getName.stripPrefix(".band_").stripSuffix("_done").toInt)
-        .toSet
-      val present = partDirs.map(_.getName.stripPrefix("band=").toInt)
-      if (done.isEmpty && present.nonEmpty && adoptUnmarked) {
-        done = present.toSet
-        commitMarkers(dir, 0, present.max + 1)
-      }
-      partDirs.filterNot(d => done(d.getName.stripPrefix("band=").toInt))
-        .foreach(d => graft.tools.Fs.rmRf(d))
-      if (done.isEmpty) 0
-      else {
-        val maxB = done.max
-        require(done == (0 to maxB).toSet,
-          s"$dir has a non-contiguous committed band prefix; clean it")
-        maxB + 1
-      }
-    }
-
-    var materialized = committedPrefix(bandDir, adoptUnmarked = true)
-    def appendBands(until: Int): Unit = if (until > materialized) {
-      val from = materialized
-      val p = baseParams.copy(numHashes = until)
+    def appendBands(until: Int): Unit = extend("bands", until) { from =>
       // native codegen'd range kernel (allocation-free, fused
       // normalize+shingle+c-min) — this is the production driver loop's
       // hottest map pass; position -> absolute band index via `pos + from`
       docs
         .select(col("id"),
-          posexplode(DedupPipeline.signatureKeysInRange(col("text"), p, from))
-            .as(Seq("pos", "key")))
+          posexplode(DedupPipeline.signatureKeysInRange(col("text"),
+            baseParams.copy(numHashes = until), from)).as(Seq("pos", "key")))
         .select(col("id"), (col("pos") + from).as("band"), col("key"))
-        .write.mode("append").partitionBy("band").parquet(bandDir)
-      commitMarkers(bandDir, from, until)
-      materialized = until
     }
 
-    // I1 applied to PAIR GENERATION (round 5): LSH candidate pairs are
-    // per-band independent (in one band a doc has exactly one bucket, so a
-    // pair arises at most once per band), which makes the cumulative
-    // DISTINCT pair set incrementally maintainable — each new band
-    // contributes only the pairs not already seen in any earlier band
-    // (anti-join), stored under band=<first-seen>. A trajectory's pair set
-    // is then a plain prefix read `band < n`: already distinct, no re-join
-    // of all h bands per step. Per step this turns the former
-    // O(h · bandRows) pair-gen re-join into O(bandRows_new + |pairs|)
-    // (one new-band group emission + one anti-join against the ~|pairs|
-    // table), and over a sweep O(h²) -> O(h) band-row joins — the same
-    // incrementality contract (and the same marker commit protocol) as
-    // the band table itself.
-    var pairsMaterialized = committedPrefix(pairDir, adoptUnmarked = false)
-    // None when no band partition holds data yet (a pathological no-pair
-    // corpus still writes markers but no parquet files)
-    def pairTable(): Option[DataFrame] = {
-      val hasData = Option(new java.io.File(pairDir).listFiles())
-        .getOrElse(Array.empty)
-        .exists(d => d.isDirectory && d.getName.startsWith("band="))
-      if (hasData) Some(spark.read.parquet(pairDir)) else None
-    }
-    def appendPairs(until: Int): Unit = if (until > pairsMaterialized) {
-      val from = pairsMaterialized
-      val bandsAll = spark.read.parquet(bandDir)
-      val range = bandsAll.where(col("band") >= from && col("band") < until)
-      val fresh0 =
-        if (until - from == 1)
-          // steady-state single-band increment: the full salted kernel
-          // (hot-bucket decomposition), provenance trivially = the band
-          DedupPipeline.candidatePairs(spark, range, Int.MaxValue,
-            saltBlockSize = saltBlockSize,
-            saltDetectFraction = saltDetectFraction)
-            ._1.withColumn("band", lit(from))
-        else
-          // bulk seed / multi-band catch-up: ONE job — the band-tagged
-          // group-emit kernel (streamed buckets, memory bounded per
-          // bucket, NEVER a join-row blowup; a hot bucket emits serially
-          // in its task, lossless) + first-seen-band aggregate for the
-          // provenance. A per-band loop here costs h0 sequential driver
-          // round-trips (measured 195 s at 4M×41 — vs 46.5 s for the
-          // single job, BASELINE.md round 5)
-          DedupPipeline.groupEmitPairsTagged(spark, range, Int.MaxValue)
-            .groupBy("a", "b").agg(min("band").as("band"))
-      val fresh = pairTable() match {
-        case None => fresh0
-        case Some(t) =>
-          fresh0.join(t.select("a", "b"), Seq("a", "b"), "left_anti")
-      }
-      fresh.write.mode("append").partitionBy("band").parquet(pairDir)
-      commitMarkers(pairDir, from, until)
-      pairsMaterialized = until
+    // I1 applied to PAIR GENERATION: LSH candidate pairs are per-band
+    // independent (in one band a doc has exactly one bucket, so a pair
+    // arises at most once per band), which makes the cumulative DISTINCT
+    // pair set incrementally maintainable — new bands contribute only the
+    // pairs not already seen in an earlier band (anti-join), stored under
+    // their first-seen band. A trajectory's pair set is then a prefix read
+    // `band < n`: already distinct, no re-join of all h bands per step —
+    // O(h) instead of O(h²) band-row joins over a sweep. The seed and every
+    // increment run the same salted band-tagged generator.
+    def appendPairs(until: Int): Unit = extend("pairs", until) { from =>
+      val range = cat.readLatest("bands").get
+        .where(col("band") >= from && col("band") < until)
+      val (tagged, _) = DedupPipeline.bandTaggedPairs(spark, range,
+        Int.MaxValue, saltBlockSize, saltDetectFraction)
+      val fresh = tagged.groupBy("a", "b").agg(min("band").as("band"))
+      cat.readLatest("pairs")
+        .fold(fresh)(t => fresh.join(t.select("a", "b"), Seq("a", "b"),
+          "left_anti"))
     }
 
     // one incremental vertex cache per clustering trajectory (I2): each is
     // advanced with a monotone-growing pair set as its hash count climbs
-    val vertexCat =
-      if (shinglingIterations < 2) None
-      else Some(new SnapshotCatalog(spark, s"$bandDir.vertex"))
-    val caches = vertexCat.map(cat =>
+    val caches = Option.when(shinglingIterations == 2)(
       Map("test" -> new VertexSketchCache(spark, cat, "test", baseParams),
           "base" -> new VertexSketchCache(spark, cat, "base", baseParams)))
 
@@ -238,24 +172,16 @@ object HashSweep {
     }
 
     def clusterWith(numBands: Int, trajectory: String): DataFrame = {
-      // ONE pair-table read per call (file listing + schema resolution are
-      // per-read driver work on a directory whose file count grows with
-      // every appended band); both consumers slice the same frame
-      val table = pairTable()
-      // prefix of the incrementally-maintained distinct pair table — the
-      // full band-row re-join this replaced is the appendPairs increment
-      val kmerPairs = table
-        .map(_.where(col("band") < numBands).select("a", "b"))
-        .getOrElse(spark.range(0)
-          .select(col("id").as("a"), col("id").as("b")))
+      // ONE pair-table read per call; both consumers slice the same frame
+      val table = cat.readLatest("pairs").get
+      val kmerPairs = table.where(col("band") < numBands).select("a", "b")
       val pairs = caches match {
         case None => kmerPairs
         case Some(cs) =>
           // band-prefix advance: the pair table IS the incorporation log
-          // (canonical distinct pairs under their first-seen band,
-          // marker-committed), so the cache's delta is a pruned
-          // `band in [prev, n)` read and the step is ONE atomic state
-          // commit (before/after legs in BASELINE.md round 6)
+          // (canonical distinct pairs under their first-seen band), so the
+          // cache's delta is a `band in [prev, n)` read and the step is ONE
+          // atomic state commit (before/after legs in BASELINE.md round 6)
           val vb = leg(s".cache_advance_$trajectory")(
             cs(trajectory).advanceByBandPrefix(table, numBands, numBands))
           val (extra, _) = DedupPipeline.candidatePairs(spark, vb,
@@ -283,7 +209,7 @@ object HashSweep {
     // instead (its state is exact; the step re-evaluates from there)
     val resumeFloor = caches.map(_("test").storedHashes).getOrElse(0)
     require(resumeFloor <= maxHashes,
-      s"vertex cache at $bandDir.vertex is at $resumeFloor hashes > " +
+      s"vertex cache in $bandDir is at $resumeFloor hashes > " +
       s"maxHashes=$maxHashes; wipe it or raise maxHashes")
     var h = math.max(startHashes, resumeFloor)
     var f = 0.0

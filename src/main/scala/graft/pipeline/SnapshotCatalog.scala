@@ -22,10 +22,14 @@ import org.json4s.jackson.JsonMethods
   *     metadata/version-hint.text             latest committed version
   * }}}
   *
-  * - A commit writes data files first, then the manifest, then atomically
-  *   swaps `version-hint.text`; readers only ever see fully-committed
-  *   snapshots, and a killed writer leaves at most orphan data files (the
-  *   hint still points at the last good version).
+  * - A commit writes data files first, then publishes the manifest
+  *   exclusively and atomically (a temp file hard-linked to
+  *   `v<N>.metadata.json`) — the commit point — then swaps
+  *   `version-hint.text`. The hint is only a starting point: the current
+  *   version rolls forward past it while `v<hint+1>.metadata.json` exists.
+  *   Readers only ever see fully-committed snapshots; a writer killed
+  *   before its manifest leaves invisible orphan data files, and one killed
+  *   after it but before the hint swap has committed.
   * - The manifest carries per-data-file lineage metrics (rows and bytes,
   *   read back from the parquet footers — no extra Spark pass), the schema,
   *   the parent version, and the operation — the north rule's
@@ -54,20 +58,29 @@ final class SnapshotCatalog(spark: SparkSession, warehouse: String) {
   private def metaDir(table: String): JPath = tableDir(table).resolve("metadata")
   private def hintFile(table: String): JPath =
     metaDir(table).resolve("version-hint.text")
+  private def manifestFile(table: String, version: Int): JPath =
+    metaDir(table).resolve(s"v$version.metadata.json")
 
-  /** Latest committed version, or 0 when the table does not exist. */
-  def currentVersion(table: String): Int =
-    if (Files.exists(hintFile(table)))
-      new String(Files.readAllBytes(hintFile(table)), "UTF-8").trim.toInt
-    else 0
+  /** Latest committed version, or 0 when the table does not exist: the
+    * hinted version, rolled forward over manifests published after it.
+    */
+  def currentVersion(table: String): Int = {
+    var v =
+      if (Files.exists(hintFile(table)))
+        new String(Files.readAllBytes(hintFile(table)), "UTF-8").trim.toInt
+      else 0
+    while (Files.exists(manifestFile(table, v + 1))) v += 1
+    v
+  }
 
   def exists(table: String): Boolean = currentVersion(table) > 0
 
   /** Commit `df` as the next snapshot of `table`. Optimistic concurrency:
-    * two racing writers cannot both create `v<N>.metadata.json` — the
-    * second CREATE_NEW fails, exactly Iceberg's conflict semantics.
-    */
-  /** @param properties caller key-values stored in the manifest (Iceberg
+    * two racing writers cannot both publish `v<N>.metadata.json` — the
+    * second link fails with `FileAlreadyExistsException`, exactly Iceberg's
+    * conflict semantics.
+    *
+    * @param properties caller key-values stored in the manifest (Iceberg
     *   snapshot summary): config fingerprints, incorporated input versions —
     *   anything a resume must validate atomically WITH the data it covers.
     */
@@ -95,11 +108,14 @@ final class SnapshotCatalog(spark: SparkSession, warehouse: String) {
       else Seq.empty
     val snap = Snapshot(table, version, operation, parent,
       carried ++ newFiles, properties, df.schema.json)
-    val manifest = metaDir(table).resolve(s"v$version.metadata.json")
-    Files.write(manifest, manifestJson(snap).getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
+    // published whole and exclusively — the commit point: the link fails
+    // if a racing writer already took version N
+    val manifestTmp = metaDir(table).resolve(s".v$version-$snapId.tmp")
+    Files.write(manifestTmp, manifestJson(snap).getBytes("UTF-8"))
+    try Files.createLink(manifestFile(table, version), manifestTmp)
+    finally Files.delete(manifestTmp)
 
-    // 3. atomic hint swap — the commit point
+    // 3. atomic hint swap (a kill before it is rolled forward on read)
     val tmp = metaDir(table).resolve(s".hint-$snapId.tmp")
     Files.write(tmp, version.toString.getBytes("UTF-8"))
     Files.move(tmp, hintFile(table), StandardCopyOption.ATOMIC_MOVE,
@@ -130,8 +146,8 @@ final class SnapshotCatalog(spark: SparkSession, warehouse: String) {
 
   /** Parse the manifest of one snapshot. */
   def snapshot(table: String, version: Int): Snapshot = {
-    val p = metaDir(table).resolve(s"v$version.metadata.json")
-    val j = JsonMethods.parse(new String(Files.readAllBytes(p), "UTF-8"))
+    val j = JsonMethods.parse(
+      new String(Files.readAllBytes(manifestFile(table, version)), "UTF-8"))
     implicit val fmt: Formats = DefaultFormats
     val files = (j \ "files") match {
       case JArray(fs) => fs.map { f =>
@@ -172,13 +188,13 @@ final class SnapshotCatalog(spark: SparkSession, warehouse: String) {
     val keepFiles = (cutoff to current)
       .flatMap(v => snapshot(table, v).files.map(_.path)).toSet
     (1 until cutoff)
-      .filter(v => Files.exists(metaDir(table).resolve(s"v$v.metadata.json")))
+      .filter(v => Files.exists(manifestFile(table, v)))
       .foreach { v => // earlier expirations may have removed a prefix already
         val snap = snapshot(table, v)
         snap.files.filterNot(f => keepFiles.contains(f.path)).foreach { f =>
           Files.deleteIfExists(Paths.get(f.path))
         }
-        Files.deleteIfExists(metaDir(table).resolve(s"v$v.metadata.json"))
+        Files.deleteIfExists(manifestFile(table, v))
       }
     // sweep now-empty data dirs (each snap-<v>-<uuid> dir belongs to one
     // expired commit; survivors still hold files)

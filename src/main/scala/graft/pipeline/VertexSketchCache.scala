@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   *
   * State is one snapshot table in a [[SnapshotCatalog]], `<name>_state`
   * — (u, h, n, mins): per node the neighbor count and the flattened h*c
-  * minima array, overwritten per step. Its manifest records the hash count
-  * and the incorporated band prefix, so each step is ONE atomic commit and
-  * a killed sweep resumes from the last committed step.
+  * minima array, overwritten per step. Its manifest records the hash
+  * count, the incorporated band prefix and the hash-family fingerprint, so
+  * each step is ONE atomic commit and a killed sweep resumes from the last
+  * committed step.
   */
 final class VertexSketchCache(spark: SparkSession, catalog: SnapshotCatalog,
     name: String, params: MinHashParams) {
@@ -46,19 +47,19 @@ final class VertexSketchCache(spark: SparkSession, catalog: SnapshotCatalog,
     * `numHashes` hash functions and return the vertex band rows
     * (id, band, key) — exactly [[VertexShingling.vertexBandRows]] of the
     * prefix's pairs, but incrementally. The pair table is an append-only
-    * band-partitioned log of canonical distinct (a, b) pairs stored under
-    * their first-seen band — the sweep's incremental pair table
-    * ([[HashSweep]]), so the step's delta is a pruned
-    * `band in [prevBands, numBands)` read and ONE atomic state commit
-    * records both the hash count and the incorporated band prefix.
+    * log of canonical distinct (a, b) pairs stored under their first-seen
+    * band — the sweep's incremental pair table ([[HashSweep]]), so the
+    * step's delta is a `band in [prevBands, numBands)` read and ONE atomic
+    * state commit records both the hash count and the incorporated band
+    * prefix.
     *
-    * Precondition (the pair table's invariant, marker-committed by the
-    * caller): rows are canonical a < b, distinct ACROSS bands, and the
-    * `[0, numBands)` prefix is fully committed before this call.
+    * Precondition (the pair table's invariant, held by the caller's
+    * snapshot commits): rows are canonical a < b, distinct ACROSS bands,
+    * and the `[0, numBands)` prefix is committed before this call.
     *
-    * @param pairTable the band-partitioned pair table (None = no pairs yet)
+    * @param pairTable the (a, b, band) pair table
     */
-  def advanceByBandPrefix(pairTable: Option[DataFrame], numBands: Int,
+  def advanceByBandPrefix(pairTable: DataFrame, numBands: Int,
       numHashes: Int): DataFrame = {
     val (prevH, prevBands) = committedBandStep
     require(numHashes >= prevH,
@@ -67,10 +68,7 @@ final class VertexSketchCache(spark: SparkSession, catalog: SnapshotCatalog,
       s"band prefix must be monotone: cached $prevBands, asked $numBands")
     val p = params.copy(numHashes = math.max(numHashes, 1))
     def slice(from: Int, until: Int): DataFrame = pairTable
-      .map(_.where(col("band") >= from && col("band") < until)
-        .select("a", "b"))
-      .getOrElse(spark.range(0)
-        .select(col("id").as("a"), col("id").as("b")))
+      .where(col("band") >= from && col("band") < until).select("a", "b")
     val delta = slice(prevBands, numBands)
     val allPairs = slice(0, numBands)
 
@@ -123,7 +121,8 @@ final class VertexSketchCache(spark: SparkSession, catalog: SnapshotCatalog,
     val stateSnap = catalog.commit(stateTable,
       state2.withColumn("h", lit(numHashes)).select("u", "h", "n", "mins"),
       properties = Map(HKey -> numHashes.toString,
-        BandsKey -> numBands.toString))
+        BandsKey -> numBands.toString,
+        HashSweep.FamilyKey -> params.fingerprint()))
     emitBands(catalog.read(stateTable, stateSnap.version), p, numHashes)
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-/** Shared filesystem helper (Bench, HashSweep, the perfbench harness) — one
+/** Shared filesystem helper (Bench, SweepBench, the perfbench harness) — one
   * recursive delete instead of a copy per caller.
   */
 object Fs {

@@ -7,13 +7,13 @@ import org.apache.spark.sql.SparkSession
 
 /** Measurement harness for the production driver loop ([[HashSweep]]) at
   * the BASELINE operating point: deterministic bench corpus, salted
-  * pair-gen, incremental band table, optional vertex round (I2 cache).
-  * Prints one line per step plus a summary (steps, wall, docs/s) for
+  * pair-gen, incremental band and pair tables, optional vertex round (I2
+  * cache). Prints one line per step plus a summary (steps, wall, docs/s) for
   * BASELINE.md. Not part of the library surface.
   *
   * Usage: SweepBench [nDocs] [maxSteps] [shinglingIterations]
   * Env:   SPARK_MASTER / SPARK_GRAFT_CPUS / SPARK_SHUFFLE_PARTITIONS as
-  *        in DedupMain; SWEEP_DIR overrides the band-table directory.
+  *        in DedupMain; SWEEP_DIR overrides the sweep's warehouse directory.
   */
 object SweepBench {
   def main(args: Array[String]): Unit = {
@@ -62,11 +62,8 @@ object SweepBench {
     println(f"sweep docs=$n steps=${res.steps.length} " +
       f"shingling_iterations=$shingIters seconds=$sec%.1f " +
       f"sec_per_step=$perStep%.1f docs_per_sec_per_step=${n / perStep}%.0f")
-    if (!sys.env.contains("SWEEP_DIR")) {
-      Fs.rmRf(new java.io.File(bandDir))
-      Fs.rmRf(new java.io.File(s"$bandDir.vertex")) // I2 cache sibling dir
-      Fs.rmRf(new java.io.File(s"$bandDir.pairs")) // incremental pair table
-    }
+    // one snapshot warehouse holds every sweep table
+    if (!sys.env.contains("SWEEP_DIR")) Fs.rmRf(new java.io.File(bandDir))
     spark.stop()
   }
 }

@@ -163,9 +163,15 @@ class DedupPipelineSpec extends AnyFunSuite with SparkSpec {
       f.delete()
     }
     rmRf(new java.io.File(s"$dir/clusters"))
+    // a middle stage killed after its manifest publish, before its first
+    // hint write: the manifest is the commit point, so it resumes as is
+    java.nio.file.Files.delete(java.nio.file.Paths.get(
+      dir, "pairs_raw", "metadata", "version-hint.text"))
     val resumed = DedupPipeline.run(spark, spark.emptyDataFrame, cfg).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
     assert(resumed == first)
+    assert(new SnapshotCatalog(spark, dir).currentVersion("pairs_raw") == 1,
+      "a published pairs_raw snapshot must be reused, not recomputed")
 
     val metrics = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/metrics.jsonl")), "UTF-8")

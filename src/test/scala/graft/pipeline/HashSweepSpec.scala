@@ -76,68 +76,74 @@ class HashSweepSpec extends AnyFunSuite with SparkSpec {
     // first run materializes bands 0..6
     HashSweep.run(spark, pages, bandDir = dir,
       startHashes = 5, delta = 3, maxHashes = 7, threshold = 2.0)
-    val rowsAfterFirst = spark.read.parquet(dir).count()
-    val perBand = spark.read.parquet(dir).groupBy("band")
+    val cat = new SnapshotCatalog(spark, dir)
+    def perBand() = cat.readLatest("bands").get.groupBy("band")
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // "restart": a new run over the same bandDir must detect the existing
-    // band=0..6 prefix and append NOTHING for those indices
+    val before = perBand()
+    assert(before.keySet == (0 until 7).toSet)
+    val versions = Seq("bands", "pairs").map(cat.currentVersion)
+    // "restart": a new run over the same bandDir must find the committed
+    // band 0..6 prefix and commit NOTHING for those indices
     HashSweep.run(spark, pages, bandDir = dir,
       startHashes = 5, delta = 3, maxHashes = 7, threshold = 2.0)
-    val perBand2 = spark.read.parquet(dir).groupBy("band")
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(perBand2 == perBand, "restart duplicated band rows")
-    assert(spark.read.parquet(dir).count() == rowsAfterFirst)
+    assert(Seq("bands", "pairs").map(cat.currentVersion) == versions,
+      "restart committed a new band or pair snapshot")
+    assert(perBand() == before, "restart duplicated band rows")
+    assert(!new java.io.File(s"$dir.pairs").exists() &&
+      !new java.io.File(s"$dir.vertex").exists(),
+      "every sweep table lives in the one bandDir warehouse")
   }
 
   test("incremental pair table: uncommitted partition dropped + re-derived") {
     import org.apache.spark.sql.functions._
+    import java.nio.file.{Files, Paths}
     val dir = java.nio.file.Files.createTempDirectory("graft-sweep-pc").toString
     val pages = Pages.toDS(spark, PagesGen.micro).toDF()
-    def assignments(d: String) =
-      HashSweep.run(spark, pages, bandDir = d,
+    def assignments() =
+      HashSweep.run(spark, pages, bandDir = dir,
         startHashes = 5, delta = 3, maxHashes = 7, threshold = 2.0)
         .assignments.collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = assignments(dir)
-    // crash simulation: the last band's pair append completed but its
-    // marker commit did not — the partition is an UNCOMMITTED increment
-    // and must be dropped and re-derived on restart, not double-counted
-    // or trusted half-written
-    val marker = new java.io.File(s"$dir.pairs", ".band_6_done")
-    assert(marker.exists(), "fixture: expected a committed band-6 marker")
-    assert(marker.delete())
-    val got = assignments(dir)
-    assert(got == want, "restart after a torn pair append diverged")
-    assert(marker.exists(), "restart must re-commit the dropped band")
-    // the pair table prefix is DISTINCT by construction: no (a, b)
-    // appears under two bands
-    val t = spark.read.parquet(s"$dir.pairs")
-    assert(t.groupBy("a", "b").agg(count(lit(1)).as("n"))
-      .where(col("n") > 1).count() == 0, "pair stored under two bands")
-
-    // same protocol on the BAND table: an unmarked band partition (torn
-    // appendBands write) is dropped and re-derived — it must never be
-    // adopted as complete and fed into the (durable) pair table
-    val bandMarker = new java.io.File(dir, ".band_6_done")
-    assert(bandMarker.exists())
-    assert(bandMarker.delete())
-    // make the tear real: remove one data file from the partition
-    val part = new java.io.File(dir, "band=6")
-    val dataFiles = part.listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(dataFiles.nonEmpty)
-    assert(dataFiles.head.delete())
-    // the stale band-6 pair marker must not mask the re-derive: drop it
-    // the way a torn step would have (pairs commit follows band commit)
-    val pairMarker6 = new java.io.File(s"$dir.pairs", ".band_6_done")
-    if (pairMarker6.exists()) {
-      assert(pairMarker6.delete())
-      graft.tools.Fs.rmRf(new java.io.File(s"$dir.pairs", "band=6"))
+    val want = assignments()
+    val cat = new SnapshotCatalog(spark, dir)
+    def rows(t: String) = cat.readLatest(t).get.collect().map(_.toSeq).toSet
+    val (bands, pairs) = (rows("bands"), rows("pairs"))
+    def meta(t: String) = Paths.get(dir, t, "metadata")
+    def setHint(t: String, v: Int) = Files.write(
+      meta(t).resolve("version-hint.text"), v.toString.getBytes("UTF-8"))
+    def check(what: String): Unit = {
+      assert(assignments() == want, s"restart after $what diverged")
+      assert(rows("bands") == bands && rows("pairs") == pairs,
+        s"restart after $what left different bands / pairs")
+      // the pair table is DISTINCT by construction: no (a, b) appears
+      // under two bands
+      assert(cat.readLatest("pairs").get.groupBy("a", "b")
+        .agg(count(lit(1)).as("n")).where(col("n") > 1).count() == 0,
+        s"pair stored under two bands after $what")
     }
-    val healed = assignments(dir)
-    assert(healed == want, "restart after a torn band append diverged")
-    assert(bandMarker.exists(), "restart must re-commit the torn band")
+    // kill point 1 — data files written, manifest never published: the
+    // last step's band-6 append is a torn write whose files stay behind,
+    // invisible, and is re-derived on restart. First the pair append alone
+    // (its band append had committed), then both.
+    def tear(t: String): Unit = {
+      val v = cat.currentVersion(t)
+      Files.delete(meta(t).resolve(s"v$v.metadata.json"))
+      setHint(t, v - 1)
+    }
+    tear("pairs")
+    assert(cat.readLatest("pairs").get.where(col("band") === 6).count() == 0)
+    check("a torn pair append")
+    tear("pairs"); tear("bands")
+    assert(cat.readLatest("bands").get.where(col("band") === 6).count() == 0)
+    check("torn band and pair appends")
+    // kill point 2 — manifest published, hint swap lost: the append IS
+    // committed; the restart rolls forward and commits nothing new
+    val versions = Seq("bands", "pairs").map(cat.currentVersion)
+    Seq("bands", "pairs").foreach(t => setHint(t, cat.currentVersion(t) - 1))
+    check("lost hint swaps")
+    assert(Seq("bands", "pairs").map(cat.currentVersion) == versions,
+      "a published append was re-derived instead of rolled forward")
   }
 
   test("restarted sweep with shinglingIterations=2 resumes at the cached step") {
@@ -179,22 +185,30 @@ class HashSweepSpec extends AnyFunSuite with SparkSpec {
     assert(salted.assignments.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       == unsalted.assignments.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
 
-    // the exact STEADY-STATE pair stage the sweep runs (one new band ->
-    // candidatePairs with the sweep's salt config; the bulk seed uses the
-    // streamed tagged group-emit, which has no join to mis-plan) must
-    // carry the salted-plan shape: hot-key joins broadcast, band rows
-    // never sort-merged against hot keys
-    val oneBand = spark.read.parquet(dir).where(col("band") === 5)
-    val sized = oneBand.groupBy("band", "key").agg(count(lit(1)).as("n"))
-    assert(sized.where(col("n") > 16).count() > 0,
-      "fixture must produce a hot bucket in the increment band")
-    val (pairs, _) = DedupPipeline.candidatePairs(spark, oneBand,
-      Int.MaxValue, saltBlockSize = 16, saltDetectFraction = 1.0)
-    val plan = pairs.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"sweep pair stage must broadcast hot keys in:\n$plan")
-    assert(!plan.contains("SortMergeJoin"),
-      s"sweep band rows must not sort-merge against hot keys in:\n$plan")
+    // and the same first-seen band per pair
+    def pairTable(d: String) = new SnapshotCatalog(spark, d).readLatest("pairs")
+      .get.collect().map(_.toSeq).toSet
+    assert(pairTable(dir) == pairTable(dir2))
+
+    // the sweep's pair generation for the bulk seed AND a one-band
+    // increment (appendPairs before its anti-join against the committed
+    // table) must carry the salted-plan shape: hot-key joins broadcast,
+    // band rows never sort-merged against hot keys
+    val bands = new SnapshotCatalog(spark, dir).readLatest("bands").get
+    for (range <- Seq(col("band") < 5, col("band") === 5)) {
+      val rows = bands.where(range)
+      val sized = rows.groupBy("band", "key").agg(count(lit(1)).as("n"))
+      assert(sized.where(col("n") > 16).count() > 0,
+        s"fixture must produce a hot bucket in $range")
+      val (tagged, _) = DedupPipeline.bandTaggedPairs(spark, rows,
+        Int.MaxValue, saltBlockSize = 16, saltDetectFraction = 1.0)
+      val plan = tagged.groupBy("a", "b").agg(min("band"))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"),
+        s"sweep pair stage must broadcast hot keys in:\n$plan")
+      assert(!plan.contains("SortMergeJoin"),
+        s"sweep band rows must not sort-merge against hot keys in:\n$plan")
+    }
   }
 
   test("restarting a sweep with a different hash family fails loudly") {
@@ -210,6 +224,31 @@ class HashSweepSpec extends AnyFunSuite with SparkSpec {
         baseParams = graft.core.MinHashParams(kmerLen = 5, numHashes = 1))
     }
     assert(ex.getMessage.contains("different hash family"))
+    // every table carries the fingerprint: cleaning only the band table
+    // must not unlock the pair table computed under the old family
+    graft.tools.Fs.rmRf(new java.io.File(dir, "bands"))
+    val ex2 = intercept[IllegalStateException] {
+      HashSweep.run(spark, pages, bandDir = dir,
+        startHashes = 5, delta = 3, maxHashes = 5, threshold = 2.0,
+        baseParams = graft.core.MinHashParams(kmerLen = 5, numHashes = 1))
+    }
+    assert(ex2.getMessage.contains("different hash family"))
+    assert(ex2.getMessage.contains("pairs"))
+  }
+
+  test("a bandDir in the older partitioned layout fails loudly") {
+    val pages = Pages.toDS(spark, PagesGen.micro).toDF()
+    for (entry <- Seq("band=0", ".params-fingerprint")) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-sweep-old")
+      val f = dir.resolve(entry).toFile
+      if (entry.startsWith("band=")) f.mkdirs() else f.createNewFile()
+      val ex = intercept[IllegalStateException] {
+        HashSweep.run(spark, pages, bandDir = dir.toString,
+          startHashes = 5, delta = 3, maxHashes = 5, threshold = 2.0)
+      }
+      assert(ex.getMessage.contains(entry))
+      assert(!dir.resolve("bands").toFile.exists(), "old layout was adopted")
+    }
   }
 
   test("startHashes > maxHashes fails loudly") {

@@ -5,8 +5,9 @@ import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Iceberg-contract checks for the snapshot StageIO: atomic versioned
-  * commits, time travel, append semantics, per-file lineage metrics, and
-  * optimistic-concurrency conflict on a duplicated version.
+  * commits, time travel, append semantics, per-file lineage metrics,
+  * optimistic-concurrency conflict on a duplicated version, and both kill
+  * points of a commit.
   */
 class SnapshotCatalogSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -113,12 +114,43 @@ class SnapshotCatalogSpec extends AnyFunSuite with SparkSpec {
   test("a racing writer to the same version fails (optimistic concurrency)") {
     val (cat, dir) = freshCat()
     cat.commit("t", Seq(1L).toDF("id"))
-    // simulate a racer that already wrote v2's manifest
+    // a racer publishes v2 while this writer, which already chose v2, is
+    // still writing its data files (the UDF runs inside that write)
     val meta = java.nio.file.Paths.get(dir, "t", "metadata", "v2.metadata.json")
-    java.nio.file.Files.write(meta, "{}".getBytes("UTF-8"))
-    intercept[java.nio.file.FileAlreadyExistsException] {
-      cat.commit("t", Seq(2L).toDF("id"))
+      .toString
+    val racer = org.apache.spark.sql.functions.udf { (x: Long) =>
+      val m = java.nio.file.Paths.get(meta)
+      if (!java.nio.file.Files.exists(m))
+        java.nio.file.Files.write(m, "{}".getBytes("UTF-8"))
+      x
     }
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      cat.commit("t", Seq(2L).toDF("id").select(racer($"id").as("id")))
+    }
+    assert(cat.currentVersion("t") == 2, "the racer's publish stands")
+  }
+
+  test("a published manifest without its hint swap rolls forward") {
+    val (cat, dir) = freshCat()
+    cat.commit("t", Seq(1L).toDF("id"))
+    cat.commit("t", Seq(2L).toDF("id"), operation = "append")
+    // a writer killed after publishing v2.metadata.json, before the hint
+    // swap: the manifest is the commit point, so v2 is committed
+    val hint = java.nio.file.Paths.get(dir, "t", "metadata", "version-hint.text")
+    java.nio.file.Files.write(hint, "1".getBytes("UTF-8"))
+    assert(cat.currentVersion("t") == 2)
+    assert(cat.readLatest("t").get.collect().map(_.getLong(0)).toSet ==
+      Set(1L, 2L))
+    // the next commit (and the one after) lands on top instead of
+    // colliding with v2 forever
+    val s3 = cat.commit("t", Seq(3L).toDF("id"), operation = "append")
+    assert(s3.version == 3 && s3.parent == 2)
+    cat.commit("t", Seq(4L).toDF("id"), operation = "append")
+    assert(cat.readLatest("t").get.collect().map(_.getLong(0)).toSet ==
+      Set(1L, 2L, 3L, 4L))
+    // a table whose very first hint write was lost is found too
+    java.nio.file.Files.delete(hint)
+    assert(cat.currentVersion("t") == 4)
   }
 
   test("an interrupted commit (data files, no manifest) is invisible") {

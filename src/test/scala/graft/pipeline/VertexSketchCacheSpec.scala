@@ -25,9 +25,9 @@ class VertexSketchCacheSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("band-prefix advance == from-scratch at every step") {
-    // the pair log is band-partitioned canonical distinct pairs under their
-    // first-seen band; each step's delta is a pruned band-range read and
-    // the step is ONE state commit
+    // the pair log is canonical distinct pairs under their first-seen
+    // band; each step's delta is a band-range read and the step is ONE
+    // state commit
     val dir = java.nio.file.Files.createTempDirectory("graft-vcacheB").toString
     val cache = new VertexSketchCache(spark,
       new SnapshotCatalog(spark, dir), "t", p)
@@ -51,7 +51,7 @@ class VertexSketchCacheSpec extends AnyFunSuite with SparkSpec {
       bands += nb
       h += step // includes a no-new-hash step
       val table = log.toSeq.toDF("a", "b", "band")
-      val got = bandsSet(cache.advanceByBandPrefix(Some(table), bands, h))
+      val got = bandsSet(cache.advanceByBandPrefix(table, bands, h))
       val want = bandsSet(VertexShingling.vertexBandRows(spark,
         log.toSeq.map(e => (e._1, e._2)).toDF("a", "b"),
         p.copy(numHashes = h)))
@@ -68,13 +68,13 @@ class VertexSketchCacheSpec extends AnyFunSuite with SparkSpec {
     val band1 = Seq((3L, 4L, 1), (5L, 6L, 1))
 
     val c1 = new VertexSketchCache(spark, cat, "t", p)
-    c1.advanceByBandPrefix(Some(band0.toDF("a", "b", "band")), 1, 4)
+    c1.advanceByBandPrefix(band0.toDF("a", "b", "band"), 1, 4)
     // "restart": a brand-new instance over the same catalog
     val c2 = new VertexSketchCache(spark, cat, "t", p)
     assert(c2.storedHashes == 4)
     val log = band0 ++ band1
     val got = bandsSet(c2.advanceByBandPrefix(
-      Some(log.toDF("a", "b", "band")), 2, 6))
+      log.toDF("a", "b", "band"), 2, 6))
     val want = bandsSet(VertexShingling.vertexBandRows(spark,
       log.map(e => (e._1, e._2)).toDF("a", "b"), p.copy(numHashes = 6)))
     assert(got == want)
