@@ -112,8 +112,8 @@ object SparkEntry {
       ((s, d) => T.substringDupsHashed(s, d, 30, maxWindowDocs = 2)),
     // batch-vs-corpus incremental dedup (daily-ingest shape): LSH bands
     // of the batch join the standing corpus band table, exact-Jaccard
-    // verified with the integer 3i >= |A|+|B| gate — never a corpus
-    // self-join
+    // verified by the pipeline's gate at tau = 1/2 (the oracle's integer
+    // 3i >= |A|+|B|) — never a corpus self-join
     "q36_corpus_dedup" -> ((s, d) => M.corpusDedupFlags(s, d)),
     // benchmark decontamination: corpus docs sharing any length-30 window
     // with the (broadcast-small) benchmark split are flagged for

@@ -331,8 +331,9 @@ object MinHashDocQueries {
     * small daily increment (broadcast / AQE), and the corpus side is the
     * standing partitioned band table, so no corpus self-join ever runs.
     * Candidates are verified by exact shingle-set Jaccard >= 1/2 with the
-    * integer-exact gate 3*|inter| >= |A| + |B| (equivalent to
-    * i/(|A|+|B|-i) >= 1/2, no float compare). Streaming analogue:
+    * pipeline's verify gate ([[DedupPipeline.jaccardGate]]); at tau = 1/2
+    * it equals the oracle's integer form 3*|inter| >= |A| + |B| (exact in
+    * double arithmetic below 2^53). Streaming analogue:
     * [[graft.streaming.StreamingDedup.againstCorpus]].
     *
     * Both inputs are (id, t) with raw text `t`; the kernels normalize it.
@@ -354,11 +355,7 @@ object MinHashDocQueries {
         DedupPipeline.packedShingleSet(col("t"), Ops.KmerLen).as(sh))
     cand.join(sets(batch, "doc_id", "shb"), "doc_id")
       .join(sets(corpus, "dup_of", "shc"), "dup_of")
-      .select(col("doc_id"), col("dup_of"),
-        PackedSetOps.intersectionSize(col("shb"), col("shc")).as("i"),
-        (PackedSetOps.setSize(col("shb")) + PackedSetOps.setSize(col("shc")))
-          .as("apb"))
-      .where(lit(3L) * col("i") >= col("apb"))
+      .where(DedupPipeline.jaccardGate(col("shb"), col("shc"), 0.5))
       .groupBy("doc_id").agg(min(col("dup_of")).as("dup_of"))
       .orderBy("doc_id")
   }

@@ -417,18 +417,22 @@ object DedupPipeline {
     val sets = pruned
       .select(col("id"), packedShingleSet(col("text"), params.kmerLen).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // native codegen'd gate expression (no ScalaUDF wrapper in the
-    // per-pair hot path) — semantics identical to the UDF form, spec-equal
-    def keep(x: Column, y: Column) =
-      GraftSqlBridge.column(PackedJaccardGate(
-        GraftSqlBridge.expression(x), GraftSqlBridge.expression(y), threshold))
     val out = pairs
       .join(sets.select(col("id").as("a"), col("sh").as("sha")), "a")
       .join(sets.select(col("id").as("b"), col("sh").as("shb")), "b")
-      .where(keep(col("sha"), col("shb")))
+      .where(jaccardGate(col("sha"), col("shb"), threshold))
       .select("a", "b")
     (out, () => { pairs.unpersist(); sets.unpersist(); () })
   }
+
+  /** The verify gate over two packed shingle sets: exact Jaccard >= `tau`,
+    * i.e. `i >= tau * (|x| + |y| - i)` with `i` the merge-count of the two
+    * sorted sets — one native codegen'd expression (no ScalaUDF in the
+    * per-pair hot path) that merge-counts each pair once.
+    */
+  def jaccardGate(x: Column, y: Column, tau: Double): Column =
+    GraftSqlBridge.column(PackedJaccardGate(
+      GraftSqlBridge.expression(x), GraftSqlBridge.expression(y), tau))
 
   /** Full run. Returns assignments (id, url, cluster, cluster_size). */
   def run(spark: SparkSession, pages: DataFrame, cfg: DedupConfig): DataFrame = {

@@ -171,23 +171,21 @@ object HashSweep {
       r
     }
 
-    def clusterWith(numBands: Int, trajectory: String): DataFrame = {
+    def clusterWith(numHashes: Int, trajectory: String): DataFrame = {
       // ONE pair-table read per call; both consumers slice the same frame
       val table = cat.readLatest("pairs").get
-      val kmerPairs = table.where(col("band") < numBands).select("a", "b")
+      val kmerPairs = table.where(col("band") < numHashes).select("a", "b")
       val pairs = caches match {
         case None => kmerPairs
         case Some(cs) =>
-          // band-prefix advance: the pair table IS the incorporation log
-          // (canonical distinct pairs under their first-seen band), so the
-          // cache's delta is a `band in [prev, n)` read and the step is ONE
-          // atomic state commit (before/after legs in BASELINE.md round 6)
+          // the pair table IS the cache's incorporation log (canonical
+          // distinct pairs under their first-seen band): the cache advances
+          // to numHashes in one cogroup and ONE atomic state commit
           val vb = leg(s".cache_advance_$trajectory")(
-            cs(trajectory).advanceByBandPrefix(table, numBands, numBands))
-          val (extra, _) = DedupPipeline.candidatePairs(spark, vb,
-            Int.MaxValue, saltBlockSize = saltBlockSize,
+            cs(trajectory).advance(table, numHashes))
+          VertexShingling.withVertexPairs(spark, kmerPairs, vb,
+            saltBlockSize = saltBlockSize,
             saltDetectFraction = saltDetectFraction)
-          kmerPairs.union(extra).distinct()
       }
       // CC runs its iteration jobs eagerly, so this sub-leg also absorbs
       // the (lazy) vertex pair-gen + union feeding it. Both pair sets are

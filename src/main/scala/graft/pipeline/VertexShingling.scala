@@ -55,37 +55,26 @@ object VertexShingling {
     buf
   }
 
-  /** c minima of h_i over a sorted distinct neighbor-id array, packed band
-    * keys; gate: |N(u)| >= c (the reference's emit gate `:680` applied to
-    * the neighbor multiset — deduped, so a set here).
+  /** A node's band keys (band, key) from its flattened per-hash c minima
+    * (`mins` is only evaluated past the gate); gate: |N(u)| >= c (the
+    * reference's emit gate `:680` applied to the neighbor multiset —
+    * deduped, so a set here). Shared by the one-shot round and the cache.
     */
-  def vertexBands(params: MinHashParams, neighbors: Array[Long]): Array[(Int, Long)] = {
+  def packBands(params: MinHashParams, n: Int,
+      mins: => Array[Long]): Iterator[(Int, Long)] = {
     val c = params.bandWidth
-    if (neighbors.length < c) return Array.empty
-    val h = params.numHashes
-    val buf = vertexMinimaRange(params, neighbors, 0, h)
-    val out = new Array[(Int, Long)](h)
-    var i = 0
-    while (i < h) {
-      out(i) = (i, MinHasher.pack(
-        java.util.Arrays.copyOfRange(buf, i * c, i * c + c), params.prime))
-      i += 1
-    }
-    out
+    if (n < c) return Iterator.empty
+    val m = mins
+    Iterator.tabulate(m.length / c)(i => (i, MinHasher.pack(
+      java.util.Arrays.copyOfRange(m, i * c, i * c + c), params.prime)))
   }
 
-  /** edges (a, b) -> extra candidate pairs from neighbor-set banding.
-    * Hot vertex-band buckets (many nodes sharing a neighbor-set sketch)
-    * get the same lossless salted decomposition as the k-mer round.
+  /** c minima of h_i over a sorted distinct neighbor-id array, packed band
+    * keys, gated by [[packBands]].
     */
-  def extraPairs(spark: SparkSession, edges: DataFrame,
-      params: MinHashParams, maxBucketSize: Int = Int.MaxValue,
-      saltBlockSize: Int = Int.MaxValue,
-      saltDetectFraction: Double = 1.0): DataFrame =
-    DedupPipeline.candidatePairs(spark,
-      vertexBandRows(spark, edges, params), maxBucketSize,
-      saltBlockSize = saltBlockSize,
-      saltDetectFraction = saltDetectFraction)._1
+  def vertexBands(params: MinHashParams, neighbors: Array[Long]): Array[(Int, Long)] =
+    packBands(params, neighbors.length,
+      vertexMinimaRange(params, neighbors, 0, params.numHashes)).toArray
 
   /** Vertex band rows (id, band, key) from a one-shot full re-sketch of
     * every node's neighbor set — the non-incremental form (the cache in
@@ -102,15 +91,30 @@ object VertexShingling {
     }.toDF("id", "band", "key")
   }
 
-  /** Round-1 edges ∪ vertex-round pairs, deduped — the graph CC runs on
-    * when `shinglingIterations > 1` (reference `:308` collate + `:368`).
+  /** Edges ∪ the candidate pairs of vertex band rows (id, band, key),
+    * deduped — the graph CC runs on when `shinglingIterations > 1`
+    * (reference `:308` collate + `:368`). Hot vertex-band buckets get the
+    * same lossless salted decomposition as the k-mer round. Shared by the
+    * one-shot round ([[densify]]) and the sweep's cached round
+    * ([[HashSweep]]).
+    */
+  def withVertexPairs(spark: SparkSession, edges: DataFrame,
+      vertexBands: DataFrame, maxBucketSize: Int = Int.MaxValue,
+      saltBlockSize: Int = Int.MaxValue,
+      saltDetectFraction: Double = 1.0): DataFrame =
+    edges.select("a", "b")
+      .union(DedupPipeline.candidatePairs(spark, vertexBands, maxBucketSize,
+        saltBlockSize = saltBlockSize,
+        saltDetectFraction = saltDetectFraction)._1)
+      .distinct()
+
+  /** One vertex round over `edges`: [[withVertexPairs]] of its one-shot
+    * [[vertexBandRows]].
     */
   def densify(spark: SparkSession, edges: DataFrame,
       params: MinHashParams, maxBucketSize: Int = Int.MaxValue,
       saltBlockSize: Int = Int.MaxValue,
       saltDetectFraction: Double = 1.0): DataFrame =
-    edges.select("a", "b")
-      .union(extraPairs(spark, edges, params, maxBucketSize,
-        saltBlockSize, saltDetectFraction))
-      .distinct()
+    withVertexPairs(spark, edges, vertexBandRows(spark, edges, params),
+      maxBucketSize, saltBlockSize, saltDetectFraction)
 }

@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import graft.core.{MinHasher, MinHashParams}
+import graft.core.MinHashParams
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persistent incremental vertex-sketch cache — the Spark restatement of
@@ -11,168 +11,110 @@ import org.apache.spark.sql.functions._
   * `shingling_toolbox.h:22-24`): across sweep steps the per-node c-min
   * minima are UPDATED, never recomputed from scratch.
   *
-  * Two monotone growth directions are exploited (both exact, because c-min
-  * sketches over disjoint set increments are mergeable):
+  * One index drives a step. A band is one hash function's c minima, so the
+  * pair table's band prefix `band < h` is exactly the graph at h hash
+  * functions, and advancing the cache from `prevH` to `h` both adds the
+  * edges of bands `[prevH, h)` and adds the hash functions `[prevH, h)`.
+  * Both updates are exact because c-min sketches over disjoint neighbour
+  * increments are mergeable:
   *
-  *   1. new edges — a node's neighbor set only grows as the hash sweep
-  *      adds bands; minima over the delta neighbors merge into the cached
-  *      minima per existing hash function;
-  *   2. new hash functions — only the indices [prevH, H) are sketched over
-  *      the full neighbor sets (the I1 trick applied to the vertex round).
+  *   - old hash range `[0, prevH)`: minima over the NEW neighbours merge
+  *     into the cached minima;
+  *   - new hash range `[prevH, h)`: sketched over the full neighbour sets
+  *     (the I1 trick applied to the vertex round).
   *
-  * Per step the work is O(Δedges * prevH + allEdges * ΔH) instead of the
-  * from-scratch O(allEdges * H); over a whole sweep that is O(E * H_final)
-  * instead of O(E * H_final^2).
+  * Per step the work is O(Δedges * prevH + allEdges * Δh) instead of the
+  * from-scratch O(allEdges * h); over a whole sweep that is O(E * h_final)
+  * instead of O(E * h_final^2). Both inputs are keyed by node, so a step is
+  * ONE sorted cogroup on `u` of the cached state and the prefix's directed
+  * edges.
   *
   * State is one snapshot table in a [[SnapshotCatalog]], `<name>_state`
-  * — (u, h, n, mins): per node the neighbor count and the flattened h*c
-  * minima array, overwritten per step. Its manifest records the hash
-  * count, the incorporated band prefix and the hash-family fingerprint, so
-  * each step is ONE atomic commit and a killed sweep resumes from the last
-  * committed step.
+  * — (u, n, mins): per node the neighbour count and the flattened h*c
+  * minima array, overwritten per step. Its manifest records the hash count
+  * and the hash-family fingerprint, so each step is ONE atomic commit and a
+  * killed sweep resumes from the last committed step.
   */
 final class VertexSketchCache(spark: SparkSession, catalog: SnapshotCatalog,
     name: String, params: MinHashParams) {
   import spark.implicits._
 
   private val stateTable = s"${name}_state"
-  private val c = params.bandWidth
   private val HKey = "hashes"
-  private val BandsKey = "bands-prefix"
 
-  /** Hash count the cached state was computed with (0 = empty cache). */
-  def storedHashes: Int = committedBandStep._1
+  /** Hash count of the latest committed state, from its manifest — a
+    * metadata read, no Spark job. 0 = empty cache.
+    */
+  def storedHashes: Int = catalog.currentVersion(stateTable) match {
+    case 0 => 0
+    case v => catalog.snapshot(stateTable, v).properties.get(HKey)
+      .map(_.toInt).getOrElse(throw new IllegalStateException(
+        s"vertex-cache state table '$stateTable' v$v carries no hash " +
+        "count — it was written by an incompatible version; wipe the " +
+        "cache directory and restart the sweep"))
+  }
 
-  /** Incorporate the pair table's band prefix `[0, numBands)` at
-    * `numHashes` hash functions and return the vertex band rows
-    * (id, band, key) — exactly [[VertexShingling.vertexBandRows]] of the
-    * prefix's pairs, but incrementally. The pair table is an append-only
-    * log of canonical distinct (a, b) pairs stored under their first-seen
-    * band — the sweep's incremental pair table ([[HashSweep]]), so the
-    * step's delta is a `band in [prevBands, numBands)` read and ONE atomic
-    * state commit records both the hash count and the incorporated band
-    * prefix.
+  /** Advance the cache to `h` hash functions over the pair table's prefix
+    * `band < h` and return the vertex band rows (id, band, key) — exactly
+    * [[VertexShingling.vertexBandRows]] of the prefix's pairs at h hash
+    * functions, but incrementally. Asking for the committed `h` again
+    * returns its rows and commits nothing; a lower `h` fails.
     *
     * Precondition (the pair table's invariant, held by the caller's
     * snapshot commits): rows are canonical a < b, distinct ACROSS bands,
-    * and the `[0, numBands)` prefix is committed before this call.
+    * and the `[0, h)` prefix is committed before this call.
     *
     * @param pairTable the (a, b, band) pair table
     */
-  def advanceByBandPrefix(pairTable: DataFrame, numBands: Int,
-      numHashes: Int): DataFrame = {
-    val (prevH, prevBands) = committedBandStep
-    require(numHashes >= prevH,
-      s"hash count must be monotone: cached $prevH, asked $numHashes")
-    require(numBands >= prevBands,
-      s"band prefix must be monotone: cached $prevBands, asked $numBands")
-    val p = params.copy(numHashes = math.max(numHashes, 1))
-    def slice(from: Int, until: Int): DataFrame = pairTable
-      .where(col("band") >= from && col("band") < until).select("a", "b")
-    val delta = slice(prevBands, numBands)
-    val allPairs = slice(0, numBands)
-
-    // minima over the delta neighbors for the EXISTING hash range [0, prevH)
-    val deltaSk =
-      if (prevH == 0) spark.emptyDataFrame
-        .withColumn("u", lit(0L)).withColumn("dn", lit(0))
-        .withColumn("dmins", lit(null).cast("array<bigint>"))
-        .select("u", "dn", "dmins").limit(0)
-      else sketchRange(directed(delta), p, 0, prevH)
-        .toDF("u", "dn", "dmins")
-
-    val prevState = catalog.readLatest(stateTable)
-      .map(_.select(col("u"), col("n"), col("mins")))
-      .getOrElse(spark.range(0).select(col("id").as("u"),
-        lit(0).as("n"), lit(null).cast("array<bigint>").as("mins")))
-
-    val cc = c
-    val mergeUdf = udf((a: Seq[Long], b: Seq[Long]) =>
-      VertexSketchCache.mergeMinima(
-        if (a == null) null else a.toArray,
-        if (b == null) null else b.toArray, cc))
-
-    // merge cached minima with the delta's (disjoint neighbor sets → exact)
-    val merged = prevState.join(deltaSk, Seq("u"), "full_outer")
-      .select(col("u"),
-        (coalesce(col("n"), lit(0)) + coalesce(col("dn"), lit(0))).as("n"),
-        mergeUdf(col("mins"), col("dmins")).as("mins"))
-
-    // fresh minima for the NEW hash range [prevH, numHashes) over the full
-    // neighbor sets — the only pass that touches all edges, and it sketches
-    // only the new hash functions
-    val state2 =
-      if (numHashes == prevH) merged
-      else {
-        val newSk = sketchRange(directed(allPairs), p, prevH, numHashes)
-          .toDF("u", "n2", "nmins")
-        val concatUdf = udf((a: Seq[Long], b: Seq[Long]) =>
-          (Option(a).getOrElse(Seq.empty) ++ Option(b).getOrElse(Seq.empty))
-            .toArray)
-        // every node with any neighbor appears in newSk (full re-sketch of
-        // the NEW range); merged covers the same set for the old range
-        merged.join(newSk, Seq("u"), "full_outer")
-          .select(col("u"),
-            coalesce(col("n2"), col("n")).as("n"),
-            concatUdf(col("mins"), col("nmins")).as("mins"))
-      }
-
-    // ONE atomic commit records the step: hash count + band prefix
-    val stateSnap = catalog.commit(stateTable,
-      state2.withColumn("h", lit(numHashes)).select("u", "h", "n", "mins"),
-      properties = Map(HKey -> numHashes.toString,
-        BandsKey -> numBands.toString,
-        HashSweep.FamilyKey -> params.fingerprint()))
-    emitBands(catalog.read(stateTable, stateSnap.version), p, numHashes)
-  }
-
-  /** Latest committed (hash count, incorporated band prefix) from the
-    * state snapshot's manifest — a metadata read, no Spark job.
-    * (0, 0) = empty cache.
-    */
-  private def committedBandStep: (Int, Int) =
-    catalog.currentVersion(stateTable) match {
-      case 0 => (0, 0)
-      case v =>
-        val p = catalog.snapshot(stateTable, v).properties
-        (p.get(HKey), p.get(BandsKey)) match {
-          case (Some(h), Some(nb)) => (h.toInt, nb.toInt)
-          case _ => throw new IllegalStateException(
-            s"vertex-cache state table '$stateTable' v$v carries no step " +
-            "properties — it was written by an incompatible version; wipe " +
-            "the cache directory and restart the sweep")
+  def advance(pairTable: DataFrame, h: Int): DataFrame = {
+    val prevH = storedHashes
+    require(h >= math.max(prevH, 1),
+      s"hash count must be monotone: cached $prevH, asked $h")
+    if (h > prevH) {
+      val p = params.copy(numHashes = h)
+      val c = p.bandWidth
+      // a cogroup needs equal key schemas, nullability included; the state
+      // and the pair table come from different sources, so both sides
+      // project the same (nullable) expression of u as their key column
+      val node = when(col("u").isNotNull, col("u")).as("u")
+      val prefix = pairTable.where(col("band") < h)
+      val edges = prefix.select(col("a").as("u"), col("b").as("v"), col("band"))
+        .union(prefix.select(col("b").as("u"), col("a").as("v"), col("band")))
+        .select(node, col("v"), col("band"))
+        .groupBy(col("u")).as[Long, (Long, Long, Int)]
+      val state = catalog.readLatest(stateTable)
+        .getOrElse(spark.emptyDataset[(Long, Int, Array[Long])].toDF("u", "n", "mins"))
+        .select(node, col("n"), col("mins"))
+      // sorted by (v, band): a neighbour's first row carries its first-seen
+      // band, which says whether the cached minima already cover it
+      val next = state.groupBy(col("u")).as[Long, (Long, Int, Array[Long])]
+        .cogroupSorted(edges)()(col("v"), col("band")) { (u, cached, es) =>
+          val all = new scala.collection.mutable.ArrayBuilder.ofLong
+          val delta = new scala.collection.mutable.ArrayBuilder.ofLong
+          var last = 0L
+          es.foreach { case (_, v, band) =>
+            if (all.length == 0 || v != last) {
+              all.addOne(v)
+              if (band >= prevH) delta.addOne(v)
+              last = v
+            }
+          }
+          val nbrs = all.result()
+          val old = VertexSketchCache.mergeMinima(
+            cached.nextOption().map(_._3).orNull,
+            VertexShingling.vertexMinimaRange(p, delta.result(), 0, prevH), c)
+          Iterator.single((u, nbrs.length,
+            Array.concat(old, VertexShingling.vertexMinimaRange(p, nbrs, prevH, h))))
         }
+      catalog.commit(stateTable, next.toDF("u", "n", "mins"),
+        properties = Map(HKey -> h.toString,
+          HashSweep.FamilyKey -> params.fingerprint()))
     }
-
-  /** (u, v) directed expansion of canonical pairs. */
-  private def directed(pairs: DataFrame): Dataset[(Long, Long)] =
-    pairs.select(col("a").as("u"), col("b").as("v"))
-      .union(pairs.select(col("b").as("u"), col("a").as("v")))
-      .as[(Long, Long)]
-
-  /** Per-u (setSize, flattened minima for hash range [from, until)) via
-    * the graph's grouped reduce ([[ConnectedComponents.neighbourSets]]).
-    */
-  private def sketchRange(nbrs: Dataset[(Long, Long)], p: MinHashParams,
-      from: Int, until: Int): Dataset[(Long, Int, Array[Long])] =
-    ConnectedComponents.neighbourSets(nbrs) { (u, vs) =>
-      Iterator.single(
-        (u, vs.length, VertexShingling.vertexMinimaRange(p, vs, from, until)))
-    }
-
-  /** Band rows from the cached state: gate |N(u)| >= c, pack per hash. */
-  private def emitBands(state: DataFrame, p: MinHashParams,
-      numHashes: Int): DataFrame = {
-    val cc = c
-    val prime = p.prime
-    state.select(col("u"), col("n"), col("mins"))
-      .as[(Long, Int, Array[Long])]
+    val p = params
+    catalog.readLatest(stateTable).get
+      .select("u", "n", "mins").as[(Long, Int, Array[Long])]
       .flatMap { case (u, n, mins) =>
-        if (n < cc) Iterator.empty
-        else (0 until numHashes).iterator.map { i =>
-          (u, i, MinHasher.pack(
-            java.util.Arrays.copyOfRange(mins, i * cc, i * cc + cc), prime))
-        }
+        VertexShingling.packBands(p, n, mins).map { case (b, k) => (u, b, k) }
       }
       .toDF("id", "band", "key")
   }

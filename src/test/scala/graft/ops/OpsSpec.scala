@@ -423,53 +423,54 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
 
   test("hot-window cap: boilerplate shared by 500 docs drops, genuine pair survives") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-hotwin").toString
-    val rng = new scala.util.Random(71)
-    def rand(n: Int) = (0 until n).map(_ => ('a' + rng.nextInt(20)).toChar).mkString
-    // deterministic window census: docs 3..500 are EXACTLY the boilerplate
-    // (11 length-30 windows, each at df=500); docs 1-2 append a genuine
-    // duplicated tail, whose 35 junction+tail windows sit at df=2
-    val boiler = rand(40)
-    val genuine = rand(35)
-    val docs = (1L to 500L).map { i =>
-      (i, boiler + (if (i <= 2) genuine else ""))
+    withTempDir("graft-hotwin") { dir =>
+      val rng = new scala.util.Random(71)
+      def rand(n: Int) = (0 until n).map(_ => ('a' + rng.nextInt(20)).toChar).mkString
+      // deterministic window census: docs 3..500 are EXACTLY the boilerplate
+      // (11 length-30 windows, each at df=500); docs 1-2 append a genuine
+      // duplicated tail, whose 35 junction+tail windows sit at df=2
+      val boiler = rand(40)
+      val genuine = rand(35)
+      val docs = (1L to 500L).map { i =>
+        (i, boiler + (if (i <= 2) genuine else ""))
+      }
+      docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+
+      val (capped, dropped) = TextQueries.substringDupsHashedManaged(
+        spark, dir, 30, maxWindowDocs = 10)
+      val got = capped.collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      assert(got == Map((1L, 2L) -> 35L),
+        s"only the genuine pair may survive the cap: $got")
+      // drop metric: exactly the 11 boilerplate window hashes, each at 500
+      val d = dropped.collect().map(_.getLong(1))
+      assert(d.length == 11 && d.forall(_ == 500L),
+        s"drop metric must name the boilerplate windows: ${d.toSeq}")
+      // cap off: the same input pays the full 500-clique — the exact k^2
+      // blowup the policy exists to prevent (and the lossless identity:
+      // maxWindowDocs = MaxValue must equal the uncapped operator)
+      val (uncapped, noDrops) =
+        TextQueries.substringDupsHashedManaged(spark, dir, 30)
+      assert(uncapped.count() == 500L * 499 / 2)
+      assert(noDrops.count() == 0)
+
+      // LCS leg, same policy: capped LCS reports the longest run of
+      // SURVIVING windows — the 35 df=2 windows cover a 64-char fragment
+      // (35 + L - 1) of docs 1-2's true 75-char common text, a documented
+      // lower bound; boilerplate-only pairs disappear entirely
+      val small = docs.take(50).toDF("doc_id", "text")
+      val (lcs, lcsDropped) = TextQueries.substringLcsManaged(
+        small, 30, maxWindowDocs = 10)
+      val lcsGot = lcs.collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      assert(lcsGot == Map((1L, 2L) -> 64L), s"capped LCS: $lcsGot")
+      assert(lcsDropped.collect().forall(_.getLong(1) == 50L))
+      val lcsUn = TextQueries.substringLcsDf(small, 30).collect()
+      assert(lcsUn.length == 50 * 49 / 2 &&
+        lcsUn.forall(_.getLong(2) >= 40L),
+        "uncapped LCS must see the boilerplate run in every pair"
+      )
     }
-    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-
-    val (capped, dropped) = TextQueries.substringDupsHashedManaged(
-      spark, dir, 30, maxWindowDocs = 10)
-    val got = capped.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(got == Map((1L, 2L) -> 35L),
-      s"only the genuine pair may survive the cap: $got")
-    // drop metric: exactly the 11 boilerplate window hashes, each at 500
-    val d = dropped.collect().map(_.getLong(1))
-    assert(d.length == 11 && d.forall(_ == 500L),
-      s"drop metric must name the boilerplate windows: ${d.toSeq}")
-    // cap off: the same input pays the full 500-clique — the exact k^2
-    // blowup the policy exists to prevent (and the lossless identity:
-    // maxWindowDocs = MaxValue must equal the uncapped operator)
-    val (uncapped, noDrops) =
-      TextQueries.substringDupsHashedManaged(spark, dir, 30)
-    assert(uncapped.count() == 500L * 499 / 2)
-    assert(noDrops.count() == 0)
-
-    // LCS leg, same policy: capped LCS reports the longest run of
-    // SURVIVING windows — the 35 df=2 windows cover a 64-char fragment
-    // (35 + L - 1) of docs 1-2's true 75-char common text, a documented
-    // lower bound; boilerplate-only pairs disappear entirely
-    val small = docs.take(50).toDF("doc_id", "text")
-    val (lcs, lcsDropped) = TextQueries.substringLcsManaged(
-      small, 30, maxWindowDocs = 10)
-    val lcsGot = lcs.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(lcsGot == Map((1L, 2L) -> 64L), s"capped LCS: $lcsGot")
-    assert(lcsDropped.collect().forall(_.getLong(1) == 50L))
-    val lcsUn = TextQueries.substringLcsDf(small, 30).collect()
-    assert(lcsUn.length == 50 * 49 / 2 &&
-      lcsUn.forall(_.getLong(2) >= 40L),
-      "uncapped LCS must see the boilerplate run in every pair"
-    )
   }
 
   test("chunk spans: distributed prefix sum == serial scan, any parallelism") {
@@ -521,22 +522,23 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     // must stay value-exact where naive `(id - min) div width` longs
     // would overflow and one value-range bucket would swallow the corpus
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-chunk").toString
-    val ids = Seq(Long.MinValue + 5, -1000L, -999L) ++
-      (0L to 400L) ++ Seq(Long.MaxValue - 3)
-    ids.map(i => (i, s"tok ${"x " * (i.abs % 7).toInt}".trim))
-      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val sparse = TextQueries.chunkSpans(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), asChunk(r.getDouble(2)),
-        asChunk(r.getDouble(3))))
-      .sortBy(_._1).toSeq
-    val sparseToks = TextQueries.tokenCount(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    var c2 = 0L
-    val sparseWant = sparseToks.map { case (id, n) =>
-      val s = c2; c2 += n; (id, n, s / 256, (c2 - 1) / 256)
-    }.toSeq
-    assert(sparse == sparseWant)
+    withTempDir("graft-chunk") { dir =>
+      val ids = Seq(Long.MinValue + 5, -1000L, -999L) ++
+        (0L to 400L) ++ Seq(Long.MaxValue - 3)
+      ids.map(i => (i, s"tok ${"x " * (i.abs % 7).toInt}".trim))
+        .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val sparse = TextQueries.chunkSpans(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), asChunk(r.getDouble(2)),
+          asChunk(r.getDouble(3))))
+        .sortBy(_._1).toSeq
+      val sparseToks = TextQueries.tokenCount(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      var c2 = 0L
+      val sparseWant = sparseToks.map { case (id, n) =>
+        val s = c2; c2 += n; (id, n, s / 256, (c2 - 1) / 256)
+      }.toSeq
+      assert(sparse == sparseWant)
+    }
   }
 
   test("ngram census: hashed scale form == string-keyed twin; exact dedup " +
@@ -553,12 +555,13 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     // identical-text group, byte-exact (collision verify raises, never
     // mislabels)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-exact").toString
-    Seq((5L, "same text"), (2L, "same text"), (9L, "other"), (7L, "SAME TEXT"))
-      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val got = graft.ops.MinHashDocQueries.exactDedup(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(2L -> 2L, 5L -> 2L, 7L -> 7L, 9L -> 9L))
+    withTempDir("graft-exact") { dir =>
+      Seq((5L, "same text"), (2L, "same text"), (9L, "other"), (7L, "SAME TEXT"))
+        .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val got = graft.ops.MinHashDocQueries.exactDedup(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(2L -> 2L, 5L -> 2L, 7L -> 7L, 9L -> 9L))
+    }
   }
 
   test("mixture sample: map-pass sampler — rates honored, reproducible, " +
@@ -608,16 +611,17 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
 
   test("repetition stats: bigram counting edges (short docs, heavy repeats)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rep").toString
-    Seq(
-      (1L, "a b a b a b"), // bigrams: "a b"x3, "b a"x2
-      (2L, "one"), // < 2 tokens: no row
-      (3L, "x y") // single bigram
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val got = TextQueries.repetition(spark, dir).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-    assert(got == Map(1L -> ((5L, 2L, 3L)), 3L -> ((1L, 1L, 1L))))
+    withTempDir("graft-rep") { dir =>
+      Seq(
+        (1L, "a b a b a b"), // bigrams: "a b"x3, "b a"x2
+        (2L, "one"), // < 2 tokens: no row
+        (3L, "x y") // single bigram
+      ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val got = TextQueries.repetition(spark, dir).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toMap
+      assert(got == Map(1L -> ((5L, 2L, 3L)), 3L -> ((1L, 1L, 1L))))
+    }
   }
 
   test("substring LCS: diagonal-run algebra == brute-force LCS (>= L)") {
@@ -700,13 +704,14 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
 
   test("lang-id tie-break order is en > de > fr > es") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-langid").toString
-    Seq((1L, "nothing matches here", "xx", "s", 20L),
-      (2L, "the und le el", "xx", "s", 14L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = TextQueries.langId(spark, tmp).collect()
-      .map(r => r.getLong(0) -> r.getString(5)).toMap
-    assert(got == Map(1L -> "en", 2L -> "en")) // all-zero and all-equal -> en
+    withTempDir("graft-langid") { tmp =>
+      Seq((1L, "nothing matches here", "xx", "s", 20L),
+        (2L, "the und le el", "xx", "s", 14L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val got = TextQueries.langId(spark, tmp).collect()
+        .map(r => r.getLong(0) -> r.getString(5)).toMap
+      assert(got == Map(1L -> "en", 2L -> "en")) // all-zero and all-equal -> en
+    }
   }
 }

@@ -54,21 +54,22 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSpec {
 
   test("inputMaterialized + knownEdgeCount skip-paths match the default run") {
     // canonical (a < b) distinct edges, parquet-backed as a stage table is
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccmat")
-      .resolve("edges").toString
-    val edges = Seq((1L, 2L), (2L, 5L), (7L, 8L), (3L, 9L))
-    val nodes = Seq(1L, 2L, 3L, 5L, 7L, 8L, 9L, 11L)
-    edges.toDF("a", "b").write.parquet(dir)
-    val fromDisk = spark.read.parquet(dir)
-    // driver-finish engaged via knownEdgeCount (no count job), distributed
-    // loop via inputMaterialized (no eager checkpoint) — both must equal
-    // the oracle and the default path
-    for ((gate, known) <- Seq((100L, 4L), (100L, -1L), (0L, -1L))) {
-      val got = ConnectedComponents.run(spark, fromDisk, nodes.toDF("id"),
-          assumeCanonical = true, driverFinishMaxEdges = gate,
-          inputMaterialized = true, knownEdgeCount = known)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == oracle(edges, nodes), s"gate=$gate known=$known")
+    withTempDir("graft-ccmat") { tmp =>
+      val dir = s"$tmp/edges"
+      val edges = Seq((1L, 2L), (2L, 5L), (7L, 8L), (3L, 9L))
+      val nodes = Seq(1L, 2L, 3L, 5L, 7L, 8L, 9L, 11L)
+      edges.toDF("a", "b").write.parquet(dir)
+      val fromDisk = spark.read.parquet(dir)
+      // driver-finish engaged via knownEdgeCount (no count job), distributed
+      // loop via inputMaterialized (no eager checkpoint) — both must equal
+      // the oracle and the default path
+      for ((gate, known) <- Seq((100L, 4L), (100L, -1L), (0L, -1L))) {
+        val got = ConnectedComponents.run(spark, fromDisk, nodes.toDF("id"),
+            assumeCanonical = true, driverFinishMaxEdges = gate,
+            inputMaterialized = true, knownEdgeCount = known)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == oracle(edges, nodes), s"gate=$gate known=$known")
+      }
     }
   }
 

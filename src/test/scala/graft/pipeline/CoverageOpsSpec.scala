@@ -14,6 +14,7 @@ class CoverageOpsSpec extends AnyFunSuite with SparkSpec {
 
   private def writeTsv(lines: Seq[String]): String = {
     val f = java.nio.file.Files.createTempFile("graft-gt", ".tsv")
+    f.toFile.deleteOnExit()
     java.nio.file.Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
     f.toString
   }
@@ -96,21 +97,23 @@ class CoverageOpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("S7: METIS export writes header, adjacency, dictionary, edges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-metis")
-    val f = dir.resolve("g.metis").toString
-    // graph: 10-20, 10-30, isolated 40 → numbering 10->1, 20->2, 30->3, 40->4
-    MetisExport.write(spark,
-      Seq((10L, 20L), (30L, 10L), (10L, 20L)).toDF("a", "b"),
-      Seq(10L, 20L, 30L, 40L).toDF("id"), f, edgeFile = true)
-    val main = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(f)), "UTF-8")
-    assert(main == "4 2\n2 3\n1\n1\n\n", s"got:\n$main")
-    val dict = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(f + "_dictionary")), "UTF-8")
-    assert(dict == "#1 10\n#2 20\n#3 30\n#4 40\n", s"got:\n$dict")
-    val edges = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(f + "_edges")), "UTF-8")
-    assert(edges == "1 2\n1 3\n2 1\n3 1\n", s"got:\n$edges")
+    withTempDir("graft-metis") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      val f = dir.resolve("g.metis").toString
+      // graph: 10-20, 10-30, isolated 40 → numbering 10->1, 20->2, 30->3, 40->4
+      MetisExport.write(spark,
+        Seq((10L, 20L), (30L, 10L), (10L, 20L)).toDF("a", "b"),
+        Seq(10L, 20L, 30L, 40L).toDF("id"), f, edgeFile = true)
+      val main = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(f)), "UTF-8")
+      assert(main == "4 2\n2 3\n1\n1\n\n", s"got:\n$main")
+      val dict = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(f + "_dictionary")), "UTF-8")
+      assert(dict == "#1 10\n#2 20\n#3 30\n#4 40\n", s"got:\n$dict")
+      val edges = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(f + "_edges")), "UTF-8")
+      assert(edges == "1 2\n1 3\n2 1\n3 1\n", s"got:\n$edges")
+    }
   }
 
   test("S4: MRMPI-print cluster scan — labels, rename, dup-label, size filter") {
@@ -192,40 +195,42 @@ class CoverageOpsSpec extends AnyFunSuite with SparkSpec {
   test("community return bridge: export → external tool file → evaluator") {
     // the reference's nocc→Louvain loop: METIS out, community file BACK
     // (`graph_formater.cpp:118-158`) — round-trip through our export
-    val dir = java.nio.file.Files.createTempDirectory("graft-comm")
-    val f = dir.resolve("g.metis").toString
-    MetisExport.write(spark,
-      Seq((10L, 20L), (30L, 10L)).toDF("a", "b"),
-      Seq(10L, 20L, 30L, 40L).toDF("id"), f)
-    // a Louvain-style tool writes one community id per dictionary line:
-    // vertices #1,#2 → community 0, #3 → 1, #4 → 2
-    java.nio.file.Files.write(dir.resolve("g.communities"),
-      "0\n0\n1\n2\n".getBytes("UTF-8"))
-    val assigned = CommunityImport.readChecked(spark,
-      dir.resolve("g.communities").toString, f + "_dictionary")
-    val got = assigned.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(10L -> 0L, 20L -> 0L, 30L -> 1L, 40L -> 2L))
-    // loop closed: the imported assignments ARE an evaluator side — the
-    // same partition under different labels scores exactly 1.0
-    val truth = Seq((10L, 7L), (20L, 7L), (30L, 8L), (40L, 9L))
-      .toDF("member", "label")
-    val s = Evaluator.fscore(spark, assigned, truth)
-    assert(math.abs(s.avg - 1.0) < 1e-12)
-    // a truncated community file (tool crashed mid-write) fails loudly
-    java.nio.file.Files.write(dir.resolve("bad.communities"),
-      "0\n0\n1\n".getBytes("UTF-8"))
-    intercept[IllegalArgumentException] {
-      CommunityImport.readChecked(spark,
-        dir.resolve("bad.communities").toString, f + "_dictionary")
-    }
-    // ...and so does the OTHER direction: a community file LONGER than the
-    // dictionary (stale dictionary) — the inner join would silently drop
-    // the extra assignments
-    java.nio.file.Files.write(dir.resolve("long.communities"),
-      "0\n0\n1\n2\n3\n5\n".getBytes("UTF-8"))
-    intercept[IllegalArgumentException] {
-      CommunityImport.readChecked(spark,
-        dir.resolve("long.communities").toString, f + "_dictionary")
+    withTempDir("graft-comm") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      val f = dir.resolve("g.metis").toString
+      MetisExport.write(spark,
+        Seq((10L, 20L), (30L, 10L)).toDF("a", "b"),
+        Seq(10L, 20L, 30L, 40L).toDF("id"), f)
+      // a Louvain-style tool writes one community id per dictionary line:
+      // vertices #1,#2 → community 0, #3 → 1, #4 → 2
+      java.nio.file.Files.write(dir.resolve("g.communities"),
+        "0\n0\n1\n2\n".getBytes("UTF-8"))
+      val assigned = CommunityImport.readChecked(spark,
+        dir.resolve("g.communities").toString, f + "_dictionary")
+      val got = assigned.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(10L -> 0L, 20L -> 0L, 30L -> 1L, 40L -> 2L))
+      // loop closed: the imported assignments ARE an evaluator side — the
+      // same partition under different labels scores exactly 1.0
+      val truth = Seq((10L, 7L), (20L, 7L), (30L, 8L), (40L, 9L))
+        .toDF("member", "label")
+      val s = Evaluator.fscore(spark, assigned, truth)
+      assert(math.abs(s.avg - 1.0) < 1e-12)
+      // a truncated community file (tool crashed mid-write) fails loudly
+      java.nio.file.Files.write(dir.resolve("bad.communities"),
+        "0\n0\n1\n".getBytes("UTF-8"))
+      intercept[IllegalArgumentException] {
+        CommunityImport.readChecked(spark,
+          dir.resolve("bad.communities").toString, f + "_dictionary")
+      }
+      // ...and so does the OTHER direction: a community file LONGER than the
+      // dictionary (stale dictionary) — the inner join would silently drop
+      // the extra assignments
+      java.nio.file.Files.write(dir.resolve("long.communities"),
+        "0\n0\n1\n2\n3\n5\n".getBytes("UTF-8"))
+      intercept[IllegalArgumentException] {
+        CommunityImport.readChecked(spark,
+          dir.resolve("long.communities").toString, f + "_dictionary")
+      }
     }
   }
 

@@ -149,61 +149,59 @@ class DedupPipelineSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("resume: stage outputs are reused and final result is identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-resume").toString
-    val pages = PagesGen.micro
-    val df = Pages.toDS(spark, pages).toDF()
-    val cfg = DedupConfig(params = p8, outputDir = Some(dir))
-    val first = DedupPipeline.run(spark, df, cfg).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
+    withTempDir("graft-resume") { dir =>
+      val pages = PagesGen.micro
+      val df = Pages.toDS(spark, pages).toDF()
+      val cfg = DedupConfig(params = p8, outputDir = Some(dir))
+      val first = DedupPipeline.run(spark, df, cfg).collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
 
-    // wipe the final stage table only (recursively — it is a snapshot
-    // table: data/ + metadata/); resume must rebuild it from earlier stages
-    def rmRf(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRf)
-      f.delete()
+      // wipe the final stage table only (recursively — it is a snapshot
+      // table: data/ + metadata/); resume must rebuild it from earlier stages
+      graft.tools.Fs.rmRf(new java.io.File(s"$dir/clusters"))
+      // a middle stage killed after its manifest publish, before its first
+      // hint write: the manifest is the commit point, so it resumes as is
+      java.nio.file.Files.delete(java.nio.file.Paths.get(
+        dir, "pairs_raw", "metadata", "version-hint.text"))
+      val resumed = DedupPipeline.run(spark, spark.emptyDataFrame, cfg).collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
+      assert(resumed == first)
+      assert(new SnapshotCatalog(spark, dir).currentVersion("pairs_raw") == 1,
+        "a published pairs_raw snapshot must be reused, not recomputed")
+
+      val metrics = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/metrics.jsonl")), "UTF-8")
+      assert(metrics.contains("\"stage\":\"clusters\""))
     }
-    rmRf(new java.io.File(s"$dir/clusters"))
-    // a middle stage killed after its manifest publish, before its first
-    // hint write: the manifest is the commit point, so it resumes as is
-    java.nio.file.Files.delete(java.nio.file.Paths.get(
-      dir, "pairs_raw", "metadata", "version-hint.text"))
-    val resumed = DedupPipeline.run(spark, spark.emptyDataFrame, cfg).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
-    assert(resumed == first)
-    assert(new SnapshotCatalog(spark, dir).currentVersion("pairs_raw") == 1,
-      "a published pairs_raw snapshot must be reused, not recomputed")
-
-    val metrics = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/metrics.jsonl")), "UTF-8")
-    assert(metrics.contains("\"stage\":\"clusters\""))
   }
 
   test("resume with a CHANGED config recomputes instead of returning stale stages") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-refp").toString
-    val df = Pages.toDS(spark, PagesGen.micro).toDF()
-    val cfg8 = DedupConfig(params = p8, outputDir = Some(dir))
-    DedupPipeline.run(spark, df, cfg8).collect()
+    withTempDir("graft-refp") { dir =>
+      val df = Pages.toDS(spark, PagesGen.micro).toDF()
+      val cfg8 = DedupConfig(params = p8, outputDir = Some(dir))
+      DedupPipeline.run(spark, df, cfg8).collect()
 
-    // same outputDir, different numHashes: every stage must recompute — the
-    // result must equal a FRESH run with the new config, not the stale h=8
-    // snapshots
-    val p16 = MinHashParams(numHashes = 16)
-    val cfg16 = DedupConfig(params = p16, outputDir = Some(dir))
-    val got = DedupPipeline.run(spark, df, cfg16).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
-    val want = DedupPipeline.run(spark, df,
-        DedupConfig(params = p16)).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
-    assert(got == want, "changed config must not resume stale snapshots")
-    // the recompute is a NEW snapshot version; the h=8 output stays
-    // readable (time travel), it is just no longer current
-    val cat = new SnapshotCatalog(spark, dir)
-    assert(cat.currentVersion("signatures") == 2)
+      // same outputDir, different numHashes: every stage must recompute — the
+      // result must equal a FRESH run with the new config, not the stale h=8
+      // snapshots
+      val p16 = MinHashParams(numHashes = 16)
+      val cfg16 = DedupConfig(params = p16, outputDir = Some(dir))
+      val got = DedupPipeline.run(spark, df, cfg16).collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
+      val want = DedupPipeline.run(spark, df,
+          DedupConfig(params = p16)).collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
+      assert(got == want, "changed config must not resume stale snapshots")
+      // the recompute is a NEW snapshot version; the h=8 output stays
+      // readable (time travel), it is just no longer current
+      val cat = new SnapshotCatalog(spark, dir)
+      assert(cat.currentVersion("signatures") == 2)
 
-    // …and an UNCHANGED config still resumes (no third version)
-    DedupPipeline.run(spark, spark.emptyDataFrame, cfg16).collect()
-    assert(cat.currentVersion("signatures") == 2,
-      "same-config resume must reuse the committed snapshot")
+      // …and an UNCHANGED config still resumes (no third version)
+      DedupPipeline.run(spark, spark.emptyDataFrame, cfg16).collect()
+      assert(cat.currentVersion("signatures") == 2,
+        "same-config resume must reuse the committed snapshot")
+    }
   }
 
   test("evaluator: spark fscore == serial fscore on pipeline output") {

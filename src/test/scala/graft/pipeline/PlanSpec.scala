@@ -48,18 +48,19 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("parquet scan prunes columns: signature stage reads only url/html") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan").toString
-    Pages.toDS(spark, PagesGen.micro).write.mode("overwrite").parquet(dir)
-    val pages = spark.read.parquet(dir)
-    val docs = DedupPipeline.extractDocs(pages)
-    val scan = docs.queryExecution.executedPlan.toString
-    // text/lang/warc_ts must not be read: extraction derives text from html
-    assert(scan.contains("ReadSchema"))
-    val readSchema = scan.linesIterator.filter(_.contains("ReadSchema"))
-      .mkString
-    assert(readSchema.contains("url") && readSchema.contains("html"))
-    assert(!readSchema.contains("warc_ts") && !readSchema.contains("lang"),
-      s"column pruning failed: $readSchema")
+    withTempDir("graft-plan") { dir =>
+      Pages.toDS(spark, PagesGen.micro).write.mode("overwrite").parquet(dir)
+      val pages = spark.read.parquet(dir)
+      val docs = DedupPipeline.extractDocs(pages)
+      val scan = docs.queryExecution.executedPlan.toString
+      // text/lang/warc_ts must not be read: extraction derives text from html
+      assert(scan.contains("ReadSchema"))
+      val readSchema = scan.linesIterator.filter(_.contains("ReadSchema"))
+        .mkString
+      assert(readSchema.contains("url") && readSchema.contains("html"))
+      assert(!readSchema.contains("warc_ts") && !readSchema.contains("lang"),
+        s"column pruning failed: $readSchema")
+    }
   }
 
   test("predicate on doc table pushes down to the parquet scan") {
@@ -69,37 +70,6 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(doc_id), GreaterThan(doc_id,100)]"),
       s"pushdown missing in:\n$plan")
-  }
-
-  /** Executed (final adaptive) plans of every action `body` runs —
-    * including the ones a query triggers while it is being built (the CC
-    * driver finish's collect, nocc's checkpoint).
-    */
-  private def executedPlans(body: => Unit): Seq[String] = {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val marker = s"plan-capture-end-${System.nanoTime()}"
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = plans.add(qe.executedPlan.toString)
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      // listener events arrive in order: once the marker query's plan is
-      // in, so is every plan before it
-      spark.range(1).select(org.apache.spark.sql.functions.lit(marker))
-        .collect()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!plans.toArray.exists(_.toString.contains(marker))) {
-        assert(System.nanoTime() < deadline, "listener events never arrived")
-        Thread.sleep(10)
-      }
-    } finally spark.listenerManager.unregister(listener)
-    plans.toArray.map(_.toString).filterNot(_.contains(marker)).toSeq
   }
 
   test("signature stage: one map pass; gate queries run only native kernels") {

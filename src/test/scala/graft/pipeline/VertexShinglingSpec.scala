@@ -30,13 +30,18 @@ class VertexShinglingSpec extends AnyFunSuite with SparkSpec {
     }.toSet
   }
 
+  /** The vertex round's own pairs: LSH over the one-shot vertex band rows. */
+  private def vertexPairs(edges: Seq[(Long, Long)]): Set[(Long, Long)] =
+    DedupPipeline.candidatePairs(spark,
+      VertexShingling.vertexBandRows(spark, edges.toDF("a", "b"), p),
+      Int.MaxValue)._1
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("nodes with identical neighbor sets always pair") {
     // u=100 and v=200 share neighbors {1, 2, 3}; no edge between them
     val edges = Seq((100L, 1L), (100L, 2L), (100L, 3L),
       (200L, 1L), (200L, 2L), (200L, 3L))
-    val extra = VertexShingling
-      .extraPairs(spark, edges.toDF("a", "b"), p)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val extra = vertexPairs(edges)
     assert(extra.contains((100L, 200L)))
     assert(extra == oraclePairs(edges))
   }
@@ -63,9 +68,7 @@ class VertexShinglingSpec extends AnyFunSuite with SparkSpec {
       (nodes(rng.nextInt(nodes.length)), nodes(rng.nextInt(nodes.length)))
     }.filter(e => e._1 != e._2)
       .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
-    val got = VertexShingling.extraPairs(spark, edges.toDF("a", "b"), p)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == oraclePairs(edges))
+    assert(vertexPairs(edges) == oraclePairs(edges))
   }
 
   test("densify unions round-1 edges with vertex pairs, deduped") {

@@ -13,6 +13,28 @@ class VertexSketchCacheSpec extends AnyFunSuite with SparkSpec {
   private def bandsSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long)] =
     df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
 
+  /** A pair log as the sweep keeps it: canonical distinct random pairs
+    * under their first-seen band, `perBand` draws for each band in
+    * `[from, until)`.
+    */
+  private final class PairLog(seed: Int) {
+    private val rng = new scala.util.Random(seed)
+    private val seen = scala.collection.mutable.Set.empty[(Long, Long)]
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
+    def grow(from: Int, until: Int, perBand: Int = 12): Unit =
+      for (b <- from until until; _ <- 0 until perBand) {
+        val x = rng.nextLong() % 300
+        val y = rng.nextLong() % 300
+        val cp = (math.min(x, y), math.max(x, y))
+        if (x != y && seen.add(cp)) rows += ((cp._1, cp._2, b))
+      }
+    def table = rows.toSeq.toDF("a", "b", "band")
+    /** The one-shot vertex round over the prefix `band < h`. */
+    def fromScratch(h: Int) = bandsSet(VertexShingling.vertexBandRows(spark,
+      rows.toSeq.filter(_._3 < h).map(e => (e._1, e._2)).toDF("a", "b"),
+      p.copy(numHashes = h)))
+  }
+
   test("mergeMinima keeps the c smallest per block, duplicates included") {
     val a = Array(1L, 5L, 10L, 20L)
     val b = Array(2L, 5L, 9L, 40L)
@@ -24,59 +46,72 @@ class VertexSketchCacheSpec extends AnyFunSuite with SparkSpec {
       .toSeq == Seq(3L, 3L))
   }
 
-  test("band-prefix advance == from-scratch at every step") {
-    // the pair log is canonical distinct pairs under their first-seen
-    // band; each step's delta is a band-range read and the step is ONE
-    // state commit
-    val dir = java.nio.file.Files.createTempDirectory("graft-vcacheB").toString
-    val cache = new VertexSketchCache(spark,
-      new SnapshotCatalog(spark, dir), "t", p)
-    val rng = new scala.util.Random(47)
-    val seen = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
-    val log = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-    var bands = 0
-    var h = 2
-    for (step <- 0 until 4) {
-      val nb = 1 + step // growing band increments incl. multi-band catch-up
-      for (b <- bands until bands + nb) {
-        (0 until 12).foreach { _ =>
-          val x = rng.nextLong() % 300
-          val y = rng.nextLong() % 300
-          if (x != y) {
-            val cp = (math.min(x, y), math.max(x, y))
-            if (!seen(cp)) { seen += cp; log += ((cp._1, cp._2, b)) }
-          }
-        }
+  test("advance to h == from-scratch at every step") {
+    // each step's delta is the band range [prevH, h) and the step is ONE
+    // state commit; steps of +1 and one multi-hash catch-up
+    withTempDir("graft-vcacheB") { dir =>
+      val cat = new SnapshotCatalog(spark, dir)
+      val cache = new VertexSketchCache(spark, cat, "t", p)
+      val log = new PairLog(47)
+      var h = 0
+      for ((next, step) <- Seq(2, 3, 4, 7, 8).zipWithIndex) {
+        log.grow(h, next)
+        h = next
+        val got = bandsSet(cache.advance(log.table, h))
+        assert(got == log.fromScratch(h), s"step $step (h=$h) diverged")
+        assert(cache.storedHashes == h && cat.currentVersion("t_state") == step + 1)
       }
-      bands += nb
-      h += step // includes a no-new-hash step
-      val table = log.toSeq.toDF("a", "b", "band")
-      val got = bandsSet(cache.advanceByBandPrefix(table, bands, h))
-      val want = bandsSet(VertexShingling.vertexBandRows(spark,
-        log.toSeq.map(e => (e._1, e._2)).toDF("a", "b"),
-        p.copy(numHashes = h)))
-      assert(got == want, s"step $step (bands=$bands, h=$h) diverged")
     }
-    assert(cache.storedHashes == h)
   }
 
   test("a reopened cache resumes from the committed state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vcache2").toString
-    val cat = new SnapshotCatalog(spark, dir)
-    // pair log: band 0 committed before the "restart", band 1 after
-    val band0 = Seq((1L, 2L, 0), (2L, 3L, 0), (4L, 5L, 0))
-    val band1 = Seq((3L, 4L, 1), (5L, 6L, 1))
+    withTempDir("graft-vcache2") { dir =>
+      val cat = new SnapshotCatalog(spark, dir)
+      // pair log: bands 0..3 committed before the "restart", 4..5 after
+      val log = new PairLog(53)
+      log.grow(0, 4, perBand = 5)
+      new VertexSketchCache(spark, cat, "t", p).advance(log.table, 4)
+      // "restart": a brand-new instance over the same catalog
+      val c2 = new VertexSketchCache(spark, cat, "t", p)
+      assert(c2.storedHashes == 4)
+      log.grow(4, 6, perBand = 5)
+      assert(bandsSet(c2.advance(log.table, 6)) == log.fromScratch(6))
+    }
+  }
 
-    val c1 = new VertexSketchCache(spark, cat, "t", p)
-    c1.advanceByBandPrefix(band0.toDF("a", "b", "band"), 1, 4)
-    // "restart": a brand-new instance over the same catalog
-    val c2 = new VertexSketchCache(spark, cat, "t", p)
-    assert(c2.storedHashes == 4)
-    val log = band0 ++ band1
-    val got = bandsSet(c2.advanceByBandPrefix(
-      log.toDF("a", "b", "band"), 2, 6))
-    val want = bandsSet(VertexShingling.vertexBandRows(spark,
-      log.map(e => (e._1, e._2)).toDF("a", "b"), p.copy(numHashes = 6)))
-    assert(got == want)
+  test("advancing to the committed h commits nothing; a lower h fails") {
+    withTempDir("graft-vcache3") { dir =>
+      val cat = new SnapshotCatalog(spark, dir)
+      val cache = new VertexSketchCache(spark, cat, "t", p)
+      val log = new PairLog(59)
+      log.grow(0, 3)
+      val first = bandsSet(cache.advance(log.table, 3))
+      assert(cat.currentVersion("t_state") == 1)
+      // a later band in the table must not leak into the committed step
+      log.grow(3, 4)
+      assert(bandsSet(cache.advance(log.table, 3)) == first)
+      assert(cat.currentVersion("t_state") == 1, "a repeated h committed")
+      intercept[IllegalArgumentException](cache.advance(log.table, 2))
+    }
+  }
+
+  test("a step is one sorted cogroup: two node exchanges, no join, no UDF") {
+    withTempDir("graft-vcache4") { dir =>
+      val cache = new VertexSketchCache(spark,
+        new SnapshotCatalog(spark, dir), "t", p)
+      val log = new PairLog(61)
+      log.grow(0, 3)
+      cache.advance(log.table, 2)
+      // the returned band rows are lazy: the only action is the commit
+      val plans = executedPlans { cache.advance(log.table, 3): Unit }
+      assert(plans.size == 1, s"one state commit expected:\n$plans")
+      // an adaptive plan prints its final plan first, then the initial one
+      val plan = plans.head.split("== Initial Plan ==")(0)
+      val exchanges = "Exchange hashpartitioning\\(u#".r.findAllMatchIn(plan).size
+      assert(exchanges == 2 && "Exchange ".r.findAllMatchIn(plan).size == 2,
+        s"two exchanges, both on u, expected in:\n$plan")
+      assert(!plan.contains("Join") && !plan.contains("UDF"),
+        s"no join and no UDF expected in:\n$plan")
+    }
   }
 }

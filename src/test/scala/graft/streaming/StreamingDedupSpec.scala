@@ -141,44 +141,46 @@ class StreamingDedupSpec extends AnyFunSuite with SparkSpec {
     implicit val sc = spark.sqlContext
     val params = MinHashParams(numHashes = 8)
     val corpus = PagesGen.micro
-    val base = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    val ckpt = base.resolve("ckpt").toString
-    val out = base.resolve("out").toString
-    val input = MemoryStream[(String, java.sql.Timestamp, String)]
-    val pages = input.toDF().toDF("url", "warc_ts", "text")
-    // file sink (the memory sink does not support checkpoint recovery)
-    def start() =
-      StreamingDedup.lshPairs(spark, pages, params, stateTtlMs = 0).toDF()
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-    def pairsOnDisk(): Set[(Long, Long)] =
-      spark.read.parquet(out).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (wave1, wave2) = corpus.splitAt(corpus.size / 2)
-    val q1 = start()
-    input.addData(wave1.map(p => (p.url, p.warc_ts, p.text)))
-    q1.processAllAvailable()
-    val got1 = pairsOnDisk()
-    q1.stop()
-    // the restarted query must restore the Array[Long] bucket state
-    // through the state-store schema check — cross-wave pairs (one member
-    // per wave) can only be emitted if the state actually survived
-    val q2 = start()
-    input.addData(wave2.map(p => (p.url, p.warc_ts, p.text)))
-    q2.processAllAvailable()
-    val got = pairsOnDisk()
-    q2.stop()
-    val docs = DedupPipeline.extractDocs(Pages.toDS(spark, corpus).toDF())
-      .select("url", "id").collect().map(r => r.getString(0) -> r.getLong(1))
-      .toMap
-    val want = SerialOracle
-      .run(corpus.map(p => docs(p.url) -> p.text), params).pairs
-    assert(got == want, s"restart lost state: pre=$got1 post=$got want=$want")
-    val w1 = wave1.map(p => docs(p.url)).toSet
-    assert(got.diff(got1).exists { case (a, b) =>
-      w1.contains(a) != w1.contains(b)
-    }, "fixture must produce at least one cross-restart pair")
+    withTempDir("graft-ckpt") { d =>
+      val base = java.nio.file.Paths.get(d)
+      val ckpt = base.resolve("ckpt").toString
+      val out = base.resolve("out").toString
+      val input = MemoryStream[(String, java.sql.Timestamp, String)]
+      val pages = input.toDF().toDF("url", "warc_ts", "text")
+      // file sink (the memory sink does not support checkpoint recovery)
+      def start() =
+        StreamingDedup.lshPairs(spark, pages, params, stateTtlMs = 0).toDF()
+          .writeStream.format("parquet")
+          .option("path", out).option("checkpointLocation", ckpt)
+          .outputMode("append").start()
+      def pairsOnDisk(): Set[(Long, Long)] =
+        spark.read.parquet(out).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val (wave1, wave2) = corpus.splitAt(corpus.size / 2)
+      val q1 = start()
+      input.addData(wave1.map(p => (p.url, p.warc_ts, p.text)))
+      q1.processAllAvailable()
+      val got1 = pairsOnDisk()
+      q1.stop()
+      // the restarted query must restore the Array[Long] bucket state
+      // through the state-store schema check — cross-wave pairs (one member
+      // per wave) can only be emitted if the state actually survived
+      val q2 = start()
+      input.addData(wave2.map(p => (p.url, p.warc_ts, p.text)))
+      q2.processAllAvailable()
+      val got = pairsOnDisk()
+      q2.stop()
+      val docs = DedupPipeline.extractDocs(Pages.toDS(spark, corpus).toDF())
+        .select("url", "id").collect().map(r => r.getString(0) -> r.getLong(1))
+        .toMap
+      val want = SerialOracle
+        .run(corpus.map(p => docs(p.url) -> p.text), params).pairs
+      assert(got == want, s"restart lost state: pre=$got1 post=$got want=$want")
+      val w1 = wave1.map(p => docs(p.url)).toSet
+      assert(got.diff(got1).exists { case (a, b) =>
+        w1.contains(a) != w1.contains(b)
+      }, "fixture must produce at least one cross-restart pair")
+    }
   }
 
   test("streaming mixture sampling == batch (stateless map + broadcast dim)") {
